@@ -27,9 +27,7 @@ object Ingest {
       .select(Schemas.samples.fieldNames.map(f =>
         if (Seq("srs", "taxon").contains(f)) col(f)
         else lit(null).cast(Schemas.samples(f).dataType).as(f)).toSeq: _*)
-    val n = fresh.count()
-    if (n > 0) wh.append("samples", fresh)
-    n
+    wh.appendCounted("samples", fresh)
   }
 
   /** `main.py tags <taxon> <file>` (db.py:194, save_tags path): only samples
@@ -41,8 +39,6 @@ object Ingest {
       .select("srs").distinct()
     val fresh = BioSampleXml.tags(
       parsed.join(existing, Seq("srs"), "left_anti"))
-    val n = fresh.count()
-    if (n > 0) wh.append("tags", fresh)
-    n
+    wh.appendCounted("tags", fresh)
   }
 }

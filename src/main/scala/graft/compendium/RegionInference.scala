@@ -150,10 +150,7 @@ object RegionInference {
     val seqs = wh.readOrEmpty("asv_sequences", Schemas.asvSequences)
     val inference = wh.readOrEmpty("asv_inference", Schemas.asvInference)
     val todo = Selection.uninferredProjects(seqs, inference, budget)
-    val results = infer(seqs.join(broadcast(todo.select("project")),
-      Seq("project"), "left_semi"))
-    val n = results.count()
-    if (n > 0) wh.append("asv_inference", results)
-    n
+    wh.appendCounted("asv_inference", infer(seqs.join(
+      broadcast(todo.select("project")), Seq("project"), "left_semi")))
   }
 }

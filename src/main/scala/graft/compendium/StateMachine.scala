@@ -6,7 +6,9 @@ import org.apache.spark.sql.functions._
 /** The project status state machine (db.py:137-146; README.md:102-111).
   *
   * States: initialized → accession_list_created → running →
-  * (to_re_run | complete) → archived → done | failed.
+  * (to_re_run | complete) → archived → done | failed. A relaunched
+  * re-run stays `to_re_run` while its single-end pass is in flight and
+  * goes straight to `complete` when that pass's results are saved.
   *
   * Transitions are pure data: validated in Scala, persisted via the tiny
   * `status` table's upsert (K3 — the table is O(projects), a dimension).
@@ -25,7 +27,7 @@ object StateMachine {
     "initialized" -> Set("accession_list_created", "failed"),
     "accession_list_created" -> Set("running", "failed"),
     "running" -> Set("to_re_run", "complete", "failed"),
-    "to_re_run" -> Set("running", "failed"),
+    "to_re_run" -> Set("running", "complete", "failed"),
     "complete" -> Set("archived", "failed"),
     "archived" -> Set("done", "failed"),
     "done" -> Set.empty,

@@ -92,6 +92,24 @@ final class Warehouse(spark: SparkSession, root: String) {
     memoWrite(table, df, partitionCols)
   }
 
+  /** Appends `df` unless it is empty and returns its row count, running
+    * its plan ONCE: the count materializes a persisted copy that the
+    * append then writes, instead of re-executing the plan (an XML parse,
+    * a Smith-Waterman pass) for the write. AQE may coalesce the cached
+    * plan's partitions as it would the uncached write's, so the append
+    * writes as few files as before (the conf is read once, at persist).
+    */
+  def appendCounted(table: String, df: DataFrame): Long = {
+    val rows = graft.core.ScopedConf(spark,
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")(
+      df.persist())
+    try {
+      val n = rows.count()
+      if (n > 0) append(table, rows)
+      n
+    } finally rows.unpersist(): Unit
+  }
+
   /** The write CLUSTERS by the partition columns first: without it every
     * shuffle task sprays one file into every partition directory it sees
     * rows for (32 tasks × 16 touched dirs = 512 files per epoch on the

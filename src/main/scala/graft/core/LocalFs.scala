@@ -10,7 +10,8 @@ import org.apache.spark.sql.SparkSession
   * The warehouse/streaming operators are many-small-file workloads
   * (staged manifest tables, state-store deltas, checkpoint WALs, tiny
   * markers), so on local disk the CRC layer is pure fixed cost: measured
-  * 8–15% of the streaming-gate wall at sf0.1 (OPTIMIZATION_r18.md §fs).
+  * 8–22% of the streaming-gate wall at sf0.1 (c21 5.4→4.5 s, c25
+  * 7.7→6.6 s, c26 9.1→7.9 s in one window; commit d375f24).
   *
   * Skipping it is the production-correct local setting, not a benchmark
   * trick: application-level CRCs on a single local disk duplicate the

@@ -41,7 +41,7 @@ private[graft] object SeededStore {
       // empty store, which must still exist to be copied
       Files.createDirectories(Paths.get(p)): Unit
     }
-    val dst = Files.createTempDirectory(s"seed_$kind").toString
+    val dst = StoreFixture.scratch(s"seed_$kind")
     copyTree(Paths.get(tmpl), Paths.get(dst))
     dst
   }

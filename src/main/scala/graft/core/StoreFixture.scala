@@ -56,4 +56,13 @@ private[graft] object StoreFixture {
       build(p)
       p
     })
+
+  /** A fresh per-invocation scratch dir (a gate's warehouse, checkpoint
+    * or seed copy) under the same per-process root, so the exit hook
+    * removes it with the stores. Nothing deletes it earlier: the frame a
+    * gate returns reads it lazily.
+    */
+  def scratch(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(base), prefix).toString
 }

@@ -24,14 +24,14 @@ object Portable {
     * precision 28 exceeds Decimal's compact-Long backing (≤18 digits), so
     * every partial add runs through BigDecimal with overflow checks —
     * measured 2.3–2.8× slower than a LONG hash aggregate on the same data
-    * (DevScratch, sf0.1 lineitem, bit-identical output). These helpers sum
+    * (sf0.1 lineitem, bit-identical output). These helpers sum
     * the 10^s-scaled integers as LONG and unscale ONCE per group through
     * exact decimal division, so the decimal arithmetic runs per GROUP, not
     * per row (guide §2.3 "narrower types" + whole-stage-codegen-friendly
     * primitives).
     *
-    * Equivalence (verified bit-for-bit in DevScratch on grouped, decimal-
-    * typed, window and adversarial >2^53 / negative inputs):
+    * Equivalence (verified bit-for-bit on grouped, decimal-typed, window
+    * and adversarial >2^53 / negative inputs; ExactSumSpec pins it):
     *  - the input columns these replace are ALREADY at scale s (2- or
     *    4-decimal generated money values; the reference cast never
     *    rounds), so `floor(v·10^s + 0.5)` recovers the exact scaled

@@ -1,10 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SQLContext,
+  SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.{Q, Tables}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQuery
+import graft.core.{Q, StoreFixture, Tables}
 import graft.functions.Portable.{exactSumDbl, exactSumDec}
+import graft.streaming.EventStreams.Event
 
 /** The reference's relational operator inventory (SURVEY.md §2) re-expressed
   * as Spark DataFrame programs over the driver's test tables, each with a
@@ -1800,40 +1804,22 @@ object RelationalQueries {
       "q51's per-customer view maintained by a REAL streaming query (MemoryStream → foreachBatch IVM) over a 3-micro-batch CDC replay, hash-equal to DuckDB's from-scratch fold",
       (s, d) => {
         import s.implicits._
-        implicit val sq = s.sqlContext
-        import graft.functions.Portable.h60
         import graft.streaming.EventStreams
         import graft.streaming.EventStreams.CdcViewChange
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        val base = Tables.load(s, d, "orders")
-          .select(col("o_orderkey").as("k"), col("o_custkey").as("ck"),
-            expr("cast(floor(o_totalprice * 100 + 0.5) AS BIGINT)")
-              .as("cents"))
         // the Debezium-shape feed (ck from the base row, md5-derived for
         // new keys) is byte-identical to c15/c23's — ONE cached collect
         // (feedCdcCk) serves the family; the feed is harness content
         val feed = feedCdcCk(s, d)
-        val root = java.nio.file.Files
-          .createTempDirectory("c12_stream").toString
-        val wh = new graft.compendium.Warehouse(s, root)
-        wh.replace("c12_base", base)
-        val in = MemoryStream[CdcViewChange]
+        val wh = new graft.compendium.Warehouse(s,
+          StoreFixture.scratch("c12_stream"))
+        wh.replace("c12_base", ordersCkBase(s, d))
         // NOT down-sized like c13's state store: c12 is stateless
         // (foreachBatch only) and its per-epoch cost is the two
         // snapshot-sized store rewrites, which WANT the session's write
         // parallelism (measured: 8 partitions = 6.6 s, 32 = 5.8 s at
         // sf0.1 quiet).
-        val q = EventStreams.ivmStream(in.toDS(), wh, "c12_base", "c12_view")
-          .start()
-        try {
-          (0L until 3L).foreach { b =>
-            val batch = feed.filter(_.k % 3 == b)
-            if (batch.nonEmpty) {
-              in.addData(batch.toSeq)
-              q.processAllAvailable()
-            }
-          }
-        } finally q.stop()
+        replay(s, (0L until 3L).map(b => feed.filter(_.k % 3 == b).toSeq))(
+          EventStreams.ivmStream(_, wh, "c12_base", "c12_view").start())
         // zero-change corpora (empty/degenerate inputs) never trigger a
         // micro-batch; the view is then the bootstrap aggregate alone
         if (!wh.exists("c12_view"))
@@ -1841,21 +1827,7 @@ object RelationalQueries {
             wh, "c12_base", "c12_view", epoch = 0L, queryId = "c12_bootstrap")
         wh.read("c12_view").orderBy("ck")
       },
-      Some(s"""WITH base AS (SELECT o_orderkey AS k, o_custkey AS ck,
-             |    CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
-             |  FROM orders),
-             |$sqlCdcResolved,
-             |rck AS (SELECT r.k, r.last_op, r.new_cents,
-             |    coalesce(b.ck,
-             |      ('0x' || substr(md5('nc_' || r.k), 1, 15))::BIGINT % 1000 + 1) AS ck
-             |  FROM resolved r LEFT JOIN base b ON r.k = b.k),
-             |applied AS (
-             |  SELECT b.k, b.ck, b.cents FROM base b
-             |  WHERE NOT EXISTS (SELECT 1 FROM rck r WHERE r.k = b.k)
-             |  UNION ALL
-             |  SELECT k, ck, new_cents AS cents FROM rck WHERE last_op <> 'D')
-             |SELECT ck, count(*)::BIGINT AS n, sum(cents)::BIGINT AS cents_total
-             |FROM applied GROUP BY ck ORDER BY ck""".stripMargin),
+      Some(sqlCkViewOracle),
       staticSchema = Some(org.apache.spark.sql.types.StructType.fromDDL(
         "ck BIGINT, n BIGINT, cents_total BIGINT"))),
 
@@ -1878,63 +1850,19 @@ object RelationalQueries {
       "watermarked stream dedup + keyed upsert replayed over 3 micro-batches with planted redeliveries: store equals the distinct slice",
       (s, d) => {
         import s.implicits._
-        implicit val sq = s.sqlContext
         import graft.streaming.EventStreams
-        import graft.streaming.EventStreams.Event
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        val slice = eventSlice(s, d, 97, 3)
-          .sortBy(e => (e.ts.getTime, e.event_id))
-        val batches = slice.grouped(math.max((slice.length + 2) / 3, 1))
-          .toSeq
-        val root = java.nio.file.Files
-          .createTempDirectory("c13_stream").toString
-        val wh = new graft.compendium.Warehouse(s, root)
-        val in = MemoryStream[Event]
-        // state-store sizing, the production lever for a stateful
-        // stream: the dedup operator creates one state-store instance
-        // per shuffle partition PER MICRO-BATCH (streaming is exempt
-        // from AQE coalescing), and this state is slice-sized — at the
-        // session's 32 partitions the fixture spends its time on state
-        // file churn, not data. Scoped set-and-restore: the conf is
-        // read once at query start.
-        val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-        // noDataMicroBatches OFF for the replay (scoped set-and-restore,
-        // like the state-store partition sizing): every emission in
-        // these gates rides a DATA batch — arrival-time emission for
-        // joins/dedup/upserts, and the sentinel rounds exist precisely
-        // to advance the watermark WITH data where deferred emission is
-        // the semantics under test — so the bookkeeping micro-batch
-        // Spark appends after each processAllAvailable is a full
-        // state-store commit cycle that adds no rows. Production keeps
-        // the default (a live stream wants evictions without waiting
-        // for traffic); a bounded replay does not.
-        val savedNoData = s.conf.get(
-          "spark.sql.streaming.noDataMicroBatches.enabled")
-        val q =
-          try {
-            s.conf.set("spark.sql.shuffle.partitions", "4")
-            s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-              "false")
-            EventStreams.warehouseIngest(in.toDS(), wh, "c13_events")
-              .start()
-          } finally {
-            s.conf.set("spark.sql.shuffle.partitions", savedParts)
-            s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-              savedNoData)
-          }
-        try {
-          var redeliver = Seq.empty[Event]
-          batches.foreach { b =>
-            // redeliveries FIRST (the retry arrives with the next
-            // poll), then the batch's new rows; tail-of-batch
-            // redeliveries sit just behind the next batch's start, well
-            // inside the 2 h horizon, so the dedup state still holds
-            // them
-            in.addData(redeliver ++ b)
-            q.processAllAvailable()
-            redeliver = b.takeRight(math.min(50, b.length)).toSeq
-          }
-        } finally q.stop()
+        val batches = thirds(eventSlice(s, d, 97, 3)
+          .sortBy(e => (e.ts.getTime, e.event_id)).toSeq)
+        val wh = new graft.compendium.Warehouse(s,
+          StoreFixture.scratch("c13_stream"))
+        // redeliveries FIRST (the retry arrives with the next poll): each
+        // batch after the first opens with the previous batch's last 50
+        // rows, which sit just behind its start, well inside the 2 h
+        // horizon, so the dedup state still holds them
+        val redelivered = (Seq.empty[Event] +: batches.map(_.takeRight(50)))
+          .zip(batches).map { case (r, b) => r ++ b }
+        replayStateful(s, redelivered)(
+          EventStreams.warehouseIngest(_, wh, "c13_events").start())
         import org.apache.spark.sql.types._
         val schema = StructType(Seq(
           StructField("event_id", LongType),
@@ -1969,10 +1897,7 @@ object RelationalQueries {
     Q("c14_cdc_partitioned",
       "q49's CDC merge through partition-granular copy-on-write: full snapshot read-back, hash-equal to the from-scratch apply",
       (s, d) => {
-        val base = Tables.load(s, d, "orders")
-          .select(col("o_orderkey").as("k"),
-            expr("cast(floor(o_totalprice * 100 + 0.5) AS BIGINT)")
-              .as("cents"))
+        val base = ordersCkBase(s, d)
         // the initial load (the epoch-0 all-inserts batch, same
         // partitioned apply) is the SEED a producer would have left —
         // template per JVM, private copy per run (SeededStore; its
@@ -2026,15 +1951,8 @@ object RelationalQueries {
       "c12's 3-micro-batch CDC replay through partition-granular base+view stores: epoch writes touch only the batch's partitions, view hash-equal to DuckDB's from-scratch fold",
       (s, d) => {
         import s.implicits._
-        implicit val sq = s.sqlContext
-        import graft.functions.Portable.h60
         import graft.streaming.EventStreams
         import graft.streaming.EventStreams.CdcViewChange
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        val base = Tables.load(s, d, "orders")
-          .select(col("o_orderkey").as("k"), col("o_custkey").as("ck"),
-            expr("cast(floor(o_totalprice * 100 + 0.5) AS BIGINT)")
-              .as("cents"))
         // seed + feed are harness (SeededStore/FeedCache via the shared
         // builder defs): the template base store builds once per JVM
         // and file-copies per run; the collected CDC slice memoizes
@@ -2043,21 +1961,11 @@ object RelationalQueries {
         // store the stream maintains is partition-granular from birth,
         // never converted
         val feed = feedCdcCk(s, d)
-        val root = seededCkWarehouse(s, d, "c15", "c15_base")
-        val wh = new graft.compendium.Warehouse(s, root)
-        val in = MemoryStream[CdcViewChange]
-        val q = EventStreams
-          .ivmStreamPartitioned(in.toDS(), wh, "c15_base", "c15_view", 16)
-          .start()
-        try {
-          (0L until 3L).foreach { b =>
-            val batch = feed.filter(_.k % 3 == b)
-            if (batch.nonEmpty) {
-              in.addData(batch.toSeq)
-              q.processAllAvailable()
-            }
-          }
-        } finally q.stop()
+        val wh = new graft.compendium.Warehouse(s,
+          seededCkWarehouse(s, d, "c15", "c15_base"))
+        replay(s, (0L until 3L).map(b => feed.filter(_.k % 3 == b).toSeq))(
+          EventStreams.ivmStreamPartitioned(_, wh, "c15_base", "c15_view", 16)
+            .start())
         if (!wh.exists("c15_view"))
           EventStreams.applyIvmBatchPartitioned(
             s.emptyDataset[CdcViewChange].toDF(),
@@ -2069,21 +1977,7 @@ object RelationalQueries {
             StructField("cents_total", LongType))))
           .select("ck", "n", "cents_total").orderBy("ck")
       },
-      Some(s"""WITH base AS (SELECT o_orderkey AS k, o_custkey AS ck,
-             |    CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
-             |  FROM orders),
-             |$sqlCdcResolved,
-             |rck AS (SELECT r.k, r.last_op, r.new_cents,
-             |    coalesce(b.ck,
-             |      ('0x' || substr(md5('nc_' || r.k), 1, 15))::BIGINT % 1000 + 1) AS ck
-             |  FROM resolved r LEFT JOIN base b ON r.k = b.k),
-             |applied AS (
-             |  SELECT b.k, b.ck, b.cents FROM base b
-             |  WHERE NOT EXISTS (SELECT 1 FROM rck r WHERE r.k = b.k)
-             |  UNION ALL
-             |  SELECT k, ck, new_cents AS cents FROM rck WHERE last_op <> 'D')
-             |SELECT ck, count(*)::BIGINT AS n, sum(cents)::BIGINT AS cents_total
-             |FROM applied GROUP BY ck ORDER BY ck""".stripMargin),
+      Some(sqlCkViewOracle),
       staticSchema = Some(org.apache.spark.sql.types.StructType.fromDDL(
         "ck BIGINT, n BIGINT, cents_total BIGINT"))),
 
@@ -2106,67 +2000,26 @@ object RelationalQueries {
       "q41's funnel depth from a REAL stateful streaming query (mapGroupsWithState) over 3 hash-shuffled micro-batches, hash-equal to the batch recompute",
       (s, d) => {
         import s.implicits._
-        implicit val sq = s.sqlContext
         import graft.streaming.EventStreams
-        import graft.streaming.EventStreams.{Event, FunnelDepth}
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+        import graft.streaming.EventStreams.FunnelDepth
         val slice = eventSlice(s, d, 97, 5)
         // hash batching: a user's events land in DIFFERENT batches in
         // non-time order — the adversarial delivery the operator's
         // monotone-depth algebra must absorb
-        val h = java.security.MessageDigest.getInstance("MD5")
-        def bucket(id: Long): Int = {
-          val dg = h.digest(s"c16_$id".getBytes("UTF-8"))
-          math.floorMod(dg(0).toInt, 3)
-        }
-        val batches = (0 until 3).map(b => slice.filter(e => bucket(e.event_id) == b))
-        val root = java.nio.file.Files
-          .createTempDirectory("c16_funnel").toString
-        val wh = new graft.compendium.Warehouse(s, root)
-        val in = MemoryStream[Event]
-        // state-store sizing: c13's rationale — one state-store instance
-        // per shuffle partition per micro-batch, slice-sized state
-        val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-        // noDataMicroBatches OFF for the replay (scoped set-and-restore,
-        // like the state-store partition sizing): every emission in
-        // these gates rides a DATA batch — arrival-time emission for
-        // joins/dedup/upserts, and the sentinel rounds exist precisely
-        // to advance the watermark WITH data where deferred emission is
-        // the semantics under test — so the bookkeeping micro-batch
-        // Spark appends after each processAllAvailable is a full
-        // state-store commit cycle that adds no rows. Production keeps
-        // the default (a live stream wants evictions without waiting
-        // for traffic); a bounded replay does not.
-        val savedNoData = s.conf.get(
-          "spark.sql.streaming.noDataMicroBatches.enabled")
-        val q =
-          try {
-            s.conf.set("spark.sql.shuffle.partitions", "4")
-            s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-              "false")
-            EventStreams.funnelStream(in.toDS()).writeStream
-              .outputMode("update")
-              .foreachBatch { (b: org.apache.spark.sql.Dataset[FunnelDepth],
-                  epoch: Long) =>
-                // the "sink keeps the latest" contract, made concrete as
-                // a keyed warehouse upsert — each user's newest depth
-                // overwrites the previous epoch's row
-                wh.upsert("c16_depths", b.toDF(), "user_id")
-              }
-              .start()
-          } finally {
-            s.conf.set("spark.sql.shuffle.partitions", savedParts)
-            s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-              savedNoData)
-          }
-        try {
-          batches.foreach { b =>
-            if (b.nonEmpty) {
-              in.addData(b.toSeq)
-              q.processAllAvailable()
+        val batches = (0 until 3).map(b =>
+          slice.filter(e => md5Bucket("c16", e.event_id, 3) == b).toSeq)
+        val wh = new graft.compendium.Warehouse(s,
+          StoreFixture.scratch("c16_funnel"))
+        replayStateful(s, batches)(
+          EventStreams.funnelStream(_).writeStream
+            .outputMode("update")
+            .foreachBatch { (b: Dataset[FunnelDepth], epoch: Long) =>
+              // the "sink keeps the latest" contract, made concrete as
+              // a keyed warehouse upsert — each user's newest depth
+              // overwrites the previous epoch's row
+              wh.upsert("c16_depths", b.toDF(), "user_id")
             }
-          }
-        } finally q.stop()
+            .start())
         import org.apache.spark.sql.types._
         wh.readOrEmpty("c16_depths", StructType(Seq(
             StructField("user_id", LongType),
@@ -2211,77 +2064,28 @@ object RelationalQueries {
       "per-user event transitions from a REAL flatMapGroupsWithState streaming query under full md5-shuffled 3-batch disorder, hash-equal to the lead() recompute",
       (s, d) => {
         import s.implicits._
-        implicit val sq = s.sqlContext
         import graft.streaming.EventStreams
-        import graft.streaming.EventStreams.Event
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        val slice = eventSlice(s, d, 97, 7)
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def hx(id: Long): String =
-          md.digest(s"c17_$id".getBytes("UTF-8"))
-            .map("%02x".format(_)).mkString
-        val shuffled = slice.sortBy(e => hx(e.event_id))
-        val root = java.nio.file.Files
-          .createTempDirectory("c17_trans").toString
-        val wh = new graft.compendium.Warehouse(s, root)
-        val in = MemoryStream[Event]
-        val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-        // noDataMicroBatches OFF for the replay (scoped set-and-restore,
-        // like the state-store partition sizing): every emission in
-        // these gates rides a DATA batch — arrival-time emission for
-        // joins/dedup/upserts, and the sentinel rounds exist precisely
-        // to advance the watermark WITH data where deferred emission is
-        // the semantics under test — so the bookkeeping micro-batch
-        // Spark appends after each processAllAvailable is a full
-        // state-store commit cycle that adds no rows. Production keeps
-        // the default (a live stream wants evictions without waiting
-        // for traffic); a bounded replay does not.
-        val savedNoData = s.conf.get(
-          "spark.sql.streaming.noDataMicroBatches.enabled")
-        val q =
-          try {
-            s.conf.set("spark.sql.shuffle.partitions", "4")
-            s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-              "false")
-            EventStreams.transitionStream(in.toDS(), allowance = "3650 days")
-              .writeStream.outputMode("append")
-              .foreachBatch {
-                (b: org.apache.spark.sql.Dataset[EventStreams.Transition],
-                    epoch: Long) =>
-                  // append-only sink: each settled pair emits exactly
-                  // once (append mode), so the store is the emission log.
-                  // Empty batches (everything still buffered behind the
-                  // watermark — the NORMAL state of the pre-sentinel
-                  // batches here) must not touch the store: a dir of
-                  // only _SUCCESS markers would fail schema inference
-                  // on the read-back of a degenerate corpus
-                  if (!b.isEmpty) wh.append("c17_transitions", b.toDF())
-              }
-              .start()
-          } finally {
-            s.conf.set("spark.sql.shuffle.partitions", savedParts)
-            s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-              savedNoData)
-          }
-        try {
-          val third = math.max((shuffled.length + 2) / 3, 1)
-          shuffled.grouped(third).foreach { b =>
-            in.addData(b.toSeq)
-            q.processAllAvailable()
-          }
-          if (slice.nonEmpty) {
-            val lastTs = slice.map(_.ts.getTime).max
-            // filler 1 advances the watermark past every real event;
-            // filler 2 triggers the batch in which the armed timeouts
-            // settle the buffered tails (sentinel users emit no pairs)
-            in.addData(Event(-1L, new java.sql.Timestamp(
-              lastTs + 4000L * 24 * 3600 * 1000), -998L, "flush", 0.0))
-            q.processAllAvailable()
-            in.addData(Event(-2L, new java.sql.Timestamp(
-              lastTs + 4001L * 24 * 3600 * 1000), -999L, "flush", 0.0))
-            q.processAllAvailable()
-          }
-        } finally q.stop()
+        val slice = eventSlice(s, d, 97, 7).toSeq
+        val wh = new graft.compendium.Warehouse(s,
+          StoreFixture.scratch("c17_trans"))
+        // the flush rounds settle the buffered tails once the armed
+        // timeouts fire (sentinel users emit no pairs)
+        replayStateful(s, thirds(slice.sortBy(e => md5Order("c17", e.event_id)))
+            ++ flushRounds(slice, 4000, 4001))(
+          EventStreams.transitionStream(_, allowance = "3650 days")
+            .writeStream.outputMode("append")
+            .foreachBatch { (b: Dataset[EventStreams.Transition],
+                epoch: Long) =>
+              // append-only sink: each settled pair emits exactly
+              // once (append mode), so the store is the emission log.
+              // Empty batches (everything still buffered behind the
+              // watermark — the NORMAL state of the pre-sentinel
+              // batches here) must not touch the store: a dir of
+              // only _SUCCESS markers would fail schema inference
+              // on the read-back of a degenerate corpus
+              if (!b.isEmpty) wh.append("c17_transitions", b.toDF())
+            }
+            .start())
         import org.apache.spark.sql.types._
         wh.readOrEmpty("c17_transitions", StructType(Seq(
             StructField("user_id", LongType),
@@ -2333,79 +2137,28 @@ object RelationalQueries {
       "per-user 30-min-gap sessions from a REAL watermark-timeout streaming query (flatMapGroupsWithState) over 3 time-contiguous md5-scrambled batches, hash-equal to q22's gaps-and-islands recompute",
       (s, d) => {
         import s.implicits._
-        implicit val sq = s.sqlContext
         import graft.streaming.EventStreams
-        import graft.streaming.EventStreams.{Event, Session}
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+        import graft.streaming.EventStreams.Session
         val slice = eventSlice(s, d, 97, 11)
-          .sortBy(e => (e.ts.getTime, e.event_id))
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def hx(id: Long): String =
-          md.digest(s"c18_$id".getBytes("UTF-8"))
-            .map("%02x".format(_)).mkString
+          .sortBy(e => (e.ts.getTime, e.event_id)).toSeq
         // contiguous thirds of the TIME-SORTED slice (the in-order
         // cross-batch contract), each scrambled internally (the
-        // operator's per-batch sort must absorb it)
-        val third = math.max((slice.length + 2) / 3, 1)
-        val batches = slice.grouped(third).map(_.sortBy(e => hx(e.event_id)))
-        val root = java.nio.file.Files
-          .createTempDirectory("c18_sess").toString
-        val wh = new graft.compendium.Warehouse(s, root)
-        val in = MemoryStream[Event]
-        val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-        // noDataMicroBatches OFF for the replay (scoped set-and-restore,
-        // like the state-store partition sizing): every emission in
-        // these gates rides a DATA batch — arrival-time emission for
-        // joins/dedup/upserts, and the sentinel rounds exist precisely
-        // to advance the watermark WITH data where deferred emission is
-        // the semantics under test — so the bookkeeping micro-batch
-        // Spark appends after each processAllAvailable is a full
-        // state-store commit cycle that adds no rows. Production keeps
-        // the default (a live stream wants evictions without waiting
-        // for traffic); a bounded replay does not.
-        val savedNoData = s.conf.get(
-          "spark.sql.streaming.noDataMicroBatches.enabled")
-        val q =
-          try {
-            s.conf.set("spark.sql.shuffle.partitions", "4")
-            s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-              "false")
-            EventStreams.sessionize(in.toDS()).writeStream
-              .outputMode("append")
-              .foreachBatch { (b: org.apache.spark.sql.Dataset[Session],
-                  epoch: Long) =>
-                // append-only: a session emits exactly once (inline close
-                // or timeout); empty pre-sentinel batches skip the store
-                // (c17's degenerate-corpus schema-inference guard)
-                if (!b.isEmpty) wh.append("c18_sessions", b.toDF())
-              }
-              .start()
-          } finally {
-            s.conf.set("spark.sql.shuffle.partitions", savedParts)
-            s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-              savedNoData)
-          }
-        try {
-          batches.foreach { b =>
-            if (b.nonEmpty) {
-              in.addData(b.toSeq)
-              q.processAllAvailable()
+        // operator's per-batch sort must absorb it); then the flush
+        // rounds fire every armed timeout (last + gap) — sentinel users'
+        // own sessions stay open in state and are filtered on read-back
+        val batches = thirds(slice).map(_.sortBy(e => md5Order("c18", e.event_id)))
+        val wh = new graft.compendium.Warehouse(s,
+          StoreFixture.scratch("c18_sess"))
+        replayStateful(s, batches ++ flushRounds(slice, 1, 2))(
+          EventStreams.sessionize(_).writeStream
+            .outputMode("append")
+            .foreachBatch { (b: Dataset[Session], epoch: Long) =>
+              // append-only: a session emits exactly once (inline close
+              // or timeout); empty pre-sentinel batches skip the store
+              // (c17's degenerate-corpus schema-inference guard)
+              if (!b.isEmpty) wh.append("c18_sessions", b.toDF())
             }
-          }
-          if (slice.nonEmpty) {
-            val lastTs = slice.map(_.ts.getTime).max
-            // sentinel 1 advances the watermark past every armed
-            // timeout (last + gap); sentinel 2 triggers the batch that
-            // fires them — sentinel users' own sessions stay open in
-            // state and are filtered on read-back
-            in.addData(Event(-1L, new java.sql.Timestamp(
-              lastTs + 24L * 3600 * 1000), -998L, "flush", 0.0))
-            q.processAllAvailable()
-            in.addData(Event(-2L, new java.sql.Timestamp(
-              lastTs + 48L * 3600 * 1000), -999L, "flush", 0.0))
-            q.processAllAvailable()
-          }
-        } finally q.stop()
+            .start())
         import org.apache.spark.sql.types._
         wh.readOrEmpty("c18_sessions", StructType(Seq(
             StructField("user_id", LongType),
@@ -2462,68 +2215,26 @@ object RelationalQueries {
       "exactly-once ingest from at-least-once redelivery via the NATIVE dropDuplicatesWithinWatermark operator over 3 batches, hash-equal to the distinct slice",
       (s, d) => {
         import s.implicits._
-        implicit val sq = s.sqlContext
         import graft.streaming.EventStreams
-        import graft.streaming.EventStreams.Event
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        val slice = eventSlice(s, d, 97, 13)
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def hx(id: Long): String =
-          md.digest(s"c19_$id".getBytes("UTF-8"))
-            .map("%02x".format(_)).mkString
+        val slice = eventSlice(s, d, 97, 13).toSeq
+        def hx(e: Event) = md5Order("c19", e.event_id)
         // originals md5-split over batches 0|1 (scrambled inside each);
         // batch 2 is pure redelivery — every dupe lands after its original
         val originals = (0 until 2).map(b => slice
-          .filter(e => Integer.parseInt(hx(e.event_id).take(2), 16) % 2 == b)
-          .sortBy(e => hx(e.event_id)))
-        val redelivered = slice.filter(_.event_id % 3 == 0)
-          .sortBy(e => hx(e.event_id))
-        val batches = originals :+ redelivered
-        val root = java.nio.file.Files
-          .createTempDirectory("c19_dedup").toString
-        val wh = new graft.compendium.Warehouse(s, root)
-        val in = MemoryStream[Event]
-        val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-        // noDataMicroBatches OFF for the replay (scoped set-and-restore,
-        // like the state-store partition sizing): every emission in
-        // these gates rides a DATA batch — arrival-time emission for
-        // joins/dedup/upserts, and the sentinel rounds exist precisely
-        // to advance the watermark WITH data where deferred emission is
-        // the semantics under test — so the bookkeeping micro-batch
-        // Spark appends after each processAllAvailable is a full
-        // state-store commit cycle that adds no rows. Production keeps
-        // the default (a live stream wants evictions without waiting
-        // for traffic); a bounded replay does not.
-        val savedNoData = s.conf.get(
-          "spark.sql.streaming.noDataMicroBatches.enabled")
-        val q =
-          try {
-            s.conf.set("spark.sql.shuffle.partitions", "4")
-            s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-              "false")
-            EventStreams.dedupedIngest(in.toDS(), watermark = "3650 days")
-              .writeStream.outputMode("append")
-              .foreachBatch { (b: org.apache.spark.sql.Dataset[Event],
-                  epoch: Long) =>
-                // append-only: a key's first sighting emits exactly once;
-                // empty batches skip the store (c17's degenerate-corpus
-                // schema-inference guard)
-                if (!b.isEmpty) wh.append("c19_events", b.toDF())
-              }
-              .start()
-          } finally {
-            s.conf.set("spark.sql.shuffle.partitions", savedParts)
-            s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-              savedNoData)
-          }
-        try {
-          batches.foreach { b =>
-            if (b.nonEmpty) {
-              in.addData(b.toSeq)
-              q.processAllAvailable()
+          .filter(e => md5Bucket("c19", e.event_id, 2) == b).sortBy(hx))
+        val redelivered = slice.filter(_.event_id % 3 == 0).sortBy(hx)
+        val wh = new graft.compendium.Warehouse(s,
+          StoreFixture.scratch("c19_dedup"))
+        replayStateful(s, originals :+ redelivered)(
+          EventStreams.dedupedIngest(_, watermark = "3650 days")
+            .writeStream.outputMode("append")
+            .foreachBatch { (b: Dataset[Event], epoch: Long) =>
+              // append-only: a key's first sighting emits exactly once;
+              // empty batches skip the store (c17's degenerate-corpus
+              // schema-inference guard)
+              if (!b.isEmpty) wh.append("c19_events", b.toDF())
             }
-          }
-        } finally q.stop()
+            .start())
         import org.apache.spark.sql.types._
         wh.readOrEmpty("c19_events", StructType(Seq(
             StructField("event_id", LongType),
@@ -2567,15 +2278,8 @@ object RelationalQueries {
       "hourly windowed rollup under a REAL watermark drop: planted 12-days-late stragglers discarded, everything else exact — hash-equal to q21 over the slice minus the late set",
       (s, d) => {
         import s.implicits._
-        implicit val sq = s.sqlContext
         import graft.streaming.EventStreams
-        import graft.streaming.EventStreams.Event
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        val slice = eventSlice(s, d, 97, 17)
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def hx(id: Long): String =
-          md.digest(s"c20_$id".getBytes("UTF-8"))
-            .map("%02x".format(_)).mkString
+        val slice = eventSlice(s, d, 97, 17).toSeq
         // UTC-pinned boundary instants: Timestamp.valueOf would read
         // these in the JVM DEFAULT zone (the one TZ knob the session's
         // spark.sql.session.timeZone=UTC does not control), shifting
@@ -2592,63 +2296,22 @@ object RelationalQueries {
           slice.filter(e => e.ts.before(day10) && !late(e)),
           slice.filter(e => !e.ts.before(day10) && e.ts.before(day20)),
           slice.filter(e => !e.ts.before(day20)) ++ slice.filter(late))
-          .map(_.sortBy(e => hx(e.event_id)))
-        val root = java.nio.file.Files
-          .createTempDirectory("c20_latedrop").toString
-        val wh = new graft.compendium.Warehouse(s, root)
-        val in = MemoryStream[Event]
-        val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-        // noDataMicroBatches OFF for the replay (scoped set-and-restore,
-        // like the state-store partition sizing): every emission in
-        // these gates rides a DATA batch — arrival-time emission for
-        // joins/dedup/upserts, and the sentinel rounds exist precisely
-        // to advance the watermark WITH data where deferred emission is
-        // the semantics under test — so the bookkeeping micro-batch
-        // Spark appends after each processAllAvailable is a full
-        // state-store commit cycle that adds no rows. Production keeps
-        // the default (a live stream wants evictions without waiting
-        // for traffic); a bounded replay does not.
-        val savedNoData = s.conf.get(
-          "spark.sql.streaming.noDataMicroBatches.enabled")
-        val q =
-          try {
-            s.conf.set("spark.sql.shuffle.partitions", "4")
-            s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-              "false")
-            EventStreams.hourlyRollup(in.toDF()).writeStream
-              .outputMode("append")
-              .foreachBatch { (b: DataFrame, epoch: Long) =>
-                // append-only: a window emits once, when the watermark
-                // passes its end
-                if (!b.isEmpty) wh.append("c20_hourly", b)
-              }
-              .start()
-          } finally {
-            s.conf.set("spark.sql.shuffle.partitions", savedParts)
-            s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-              savedNoData)
-          }
-        try {
-          batches.foreach { b =>
-            if (b.nonEmpty) {
-              in.addData(b.toSeq)
-              q.processAllAvailable()
+          .map(_.sortBy(e => md5Order("c20", e.event_id)))
+        val wh = new graft.compendium.Warehouse(s,
+          StoreFixture.scratch("c20_latedrop"))
+        // flush round 1 pushes the watermark past every real window;
+        // round 2 pushes it past sentinel 1's OWN window so that one
+        // also flushes (and is filtered below by event_type) — sentinel
+        // 2's window never finalizes and cannot leak
+        replayStateful(s, batches ++ flushRounds(slice, 400, 401))(ds =>
+          EventStreams.hourlyRollup(ds.toDF()).writeStream
+            .outputMode("append")
+            .foreachBatch { (b: DataFrame, epoch: Long) =>
+              // append-only: a window emits once, when the watermark
+              // passes its end
+              if (!b.isEmpty) wh.append("c20_hourly", b)
             }
-          }
-          if (slice.nonEmpty) {
-            val lastTs = slice.map(_.ts.getTime).max
-            // sentinel 1 pushes the watermark past every real window;
-            // sentinel 2 pushes it past sentinel 1's OWN window so that
-            // one also flushes (and is filtered below by event_type) —
-            // sentinel 2's window never finalizes and cannot leak
-            in.addData(Event(-1L, new java.sql.Timestamp(
-              lastTs + 400L * 24 * 3600 * 1000), -998L, "flush", 0.0))
-            q.processAllAvailable()
-            in.addData(Event(-2L, new java.sql.Timestamp(
-              lastTs + 401L * 24 * 3600 * 1000), -999L, "flush", 0.0))
-            q.processAllAvailable()
-          }
-        } finally q.stop()
+            .start())
         import org.apache.spark.sql.types._
         wh.readOrEmpty("c20_hourly", StructType(Seq(
             StructField("hour", TimestampType),
@@ -2693,59 +2356,20 @@ object RelationalQueries {
       "purchases ⋈ same-user clicks (72 h window) from a REAL stream-stream interval join over 3 md5-shuffled batches, hash-equal to the batch recompute",
       (s, d) => {
         import s.implicits._
-        implicit val sq = s.sqlContext
         import graft.streaming.EventStreams
-        import graft.streaming.EventStreams.Event
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        val slice = eventSlice(s, d, 13, 4)
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def hx(id: Long): String =
-          md.digest(s"c21_$id".getBytes("UTF-8"))
-            .map("%02x".format(_)).mkString
-        val shuffled = slice.sortBy(e => hx(e.event_id))
-        val root = java.nio.file.Files
-          .createTempDirectory("c21_ssjoin").toString
-        val wh = new graft.compendium.Warehouse(s, root)
-        val in = MemoryStream[Event]
-        val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-        // noDataMicroBatches OFF for the replay (scoped set-and-restore,
-        // like the state-store partition sizing): every emission in
-        // these gates rides a DATA batch — arrival-time emission for
-        // joins/dedup/upserts, and the sentinel rounds exist precisely
-        // to advance the watermark WITH data where deferred emission is
-        // the semantics under test — so the bookkeeping micro-batch
-        // Spark appends after each processAllAvailable is a full
-        // state-store commit cycle that adds no rows. Production keeps
-        // the default (a live stream wants evictions without waiting
-        // for traffic); a bounded replay does not.
-        val savedNoData = s.conf.get(
-          "spark.sql.streaming.noDataMicroBatches.enabled")
-        val q =
-          try {
-            s.conf.set("spark.sql.shuffle.partitions", "4")
-            s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-              "false")
-            EventStreams.purchaseAttribution(in.toDS(),
-                watermark = "3650 days", windowHours = 72)
-              .writeStream.outputMode("append")
-              .foreachBatch { (b: DataFrame, epoch: Long) =>
-                // append-only: a pair emits once, when its later side
-                // arrives; match-free batches skip the store
-                if (!b.isEmpty) wh.append("c21_pairs", b)
-              }
-              .start()
-          } finally {
-            s.conf.set("spark.sql.shuffle.partitions", savedParts)
-            s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-              savedNoData)
-          }
-        try {
-          val third = math.max((shuffled.length + 2) / 3, 1)
-          shuffled.grouped(third).foreach { b =>
-            in.addData(b.toSeq)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
+        val wh = new graft.compendium.Warehouse(s,
+          StoreFixture.scratch("c21_ssjoin"))
+        replayStateful(s, thirds(eventSlice(s, d, 13, 4).toSeq
+            .sortBy(e => md5Order("c21", e.event_id))))(
+          EventStreams.purchaseAttribution(_,
+              watermark = "3650 days", windowHours = 72)
+            .writeStream.outputMode("append")
+            .foreachBatch { (b: DataFrame, epoch: Long) =>
+              // append-only: a pair emits once, when its later side
+              // arrives; match-free batches skip the store
+              if (!b.isEmpty) wh.append("c21_pairs", b)
+            }
+            .start())
         import org.apache.spark.sql.types._
         wh.readOrEmpty("c21_pairs", StructType(Seq(
             StructField("user_id", LongType),
@@ -2797,79 +2421,35 @@ object RelationalQueries {
       "purchases ⟕ same-user clicks (72 h window): watermark-closed null emission for unmatched purchases, hash-equal to the batch left interval join",
       (s, d) => {
         import s.implicits._
-        implicit val sq = s.sqlContext
         import graft.streaming.EventStreams
-        import graft.streaming.EventStreams.Event
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        val slice = eventSlice(s, d, 13, 4)
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def hx(id: Long): String =
-          md.digest(s"c28_$id".getBytes("UTF-8"))
-            .map("%02x".format(_)).mkString
-        val shuffled = slice.sortBy(e => hx(e.event_id))
-        val root = java.nio.file.Files
-          .createTempDirectory("c28_outer").toString
-        val wh = new graft.compendium.Warehouse(s, root)
-        val in = MemoryStream[Event]
-        val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-        // noDataMicroBatches OFF for the replay (scoped set-and-restore,
-        // like the state-store partition sizing): every emission in
-        // these gates rides a DATA batch — arrival-time emission for
-        // joins/dedup/upserts, and the sentinel rounds exist precisely
-        // to advance the watermark WITH data where deferred emission is
-        // the semantics under test — so the bookkeeping micro-batch
-        // Spark appends after each processAllAvailable is a full
-        // state-store commit cycle that adds no rows. Production keeps
-        // the default (a live stream wants evictions without waiting
-        // for traffic); a bounded replay does not.
-        val savedNoData = s.conf.get(
-          "spark.sql.streaming.noDataMicroBatches.enabled")
-        val q =
-          try {
-            s.conf.set("spark.sql.shuffle.partitions", "4")
-            s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-              "false")
-            EventStreams.purchaseAttribution(in.toDS(),
-                watermark = "3650 days", windowHours = 72,
-                joinType = "left_outer")
-              .writeStream.outputMode("append")
-              .foreachBatch { (b: DataFrame, epoch: Long) =>
-                if (!b.isEmpty) wh.append("c28_pairs", b)
-              }
-              .start()
-          } finally {
-            s.conf.set("spark.sql.shuffle.partitions", savedParts)
-            s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-              savedNoData)
+        val slice = eventSlice(s, d, 13, 4).toSeq
+        // sentinel round 1 advances both side's watermarks past every
+        // real purchase's window (delay 3650 d → watermark lands ~50 d
+        // past the data); round 2 re-advances so the eviction batch
+        // definitely runs — held purchases flush their null rows, the
+        // sentinels themselves are filtered by id below (round 2's
+        // purchase never flushes and cannot leak). Negative ids keep
+        // them out of the output filter and off real users.
+        val flush = if (slice.isEmpty) Nil else {
+          val lastTs = slice.map(_.ts.getTime).max
+          Seq(3700L, 7400L).map { days =>
+            val ts = new java.sql.Timestamp(lastTs + days * 86400000L)
+            Seq(Event(-996L - days, ts, -1L, "click", 0.0),
+              Event(-998L - days, ts, -1L, "purchase", 0.0))
           }
-        try {
-          val third = math.max((shuffled.length + 2) / 3, 1)
-          shuffled.grouped(third).foreach { b =>
-            in.addData(b.toSeq)
-            q.processAllAvailable()
-          }
-          if (slice.nonEmpty) {
-            val lastTs = slice.map(_.ts.getTime).max
-            // sentinel round 1 advances both side's watermarks past
-            // every real purchase's window (delay 3650 d → watermark
-            // lands ~50 d past the data); round 2 re-advances so the
-            // eviction batch definitely runs — held purchases flush
-            // their null rows, the sentinels themselves are filtered
-            // by id below (round 2's purchase never flushes and
-            // cannot leak)
-            Seq(3700L, 7400L).foreach { days =>
-              val ts = new java.sql.Timestamp(
-                lastTs + days * 24 * 3600 * 1000)
-              // Event(event_id, ts, user_id, ...): negative ids keep
-              // the sentinels out of the output filter and off real
-              // users
-              in.addData(
-                Event(-996L - days, ts, -1L, "click", 0.0),
-                Event(-998L - days, ts, -1L, "purchase", 0.0))
-              q.processAllAvailable()
+        }
+        val wh = new graft.compendium.Warehouse(s,
+          StoreFixture.scratch("c28_outer"))
+        replayStateful(s,
+          thirds(slice.sortBy(e => md5Order("c28", e.event_id))) ++ flush)(
+          EventStreams.purchaseAttribution(_,
+              watermark = "3650 days", windowHours = 72,
+              joinType = "left_outer")
+            .writeStream.outputMode("append")
+            .foreachBatch { (b: DataFrame, epoch: Long) =>
+              if (!b.isEmpty) wh.append("c28_pairs", b)
             }
-          }
-        } finally q.stop()
+            .start())
         import org.apache.spark.sql.types._
         wh.readOrEmpty("c28_pairs", StructType(Seq(
             StructField("user_id", LongType),
@@ -2919,61 +2499,19 @@ object RelationalQueries {
       "continuous erasure: tombstones replayed through forgetIngest's exactly-once manifest commits, final store hash-equal to the rebuild over survivors (s29's oracle verbatim)",
       (s, d) => {
         import s.implicits._
-        implicit val sq = s.sqlContext
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
         import graft.streaming.VectorStreams
-        import graft.functions.Portable.vecD
-        graft.plans.VectorExpressions.register(s)
-        val emb = Tables.embeddings(s, d)
-          .select(col("vec_id"), col("label").cast("long").as("clabel"),
-            vecD(col("embedding")).as("v"))
         // seed + feed are harness (SeededStore/FeedCache — the
         // c15/c23/c24 discipline): the stored-slice centroid store a
         // producer would have committed templates once per JVM and
         // file-copies per run; the tombstone slice collects once
         val root = c22SeededStore(s, d)
         val gone = c22Tombstones(s, d)
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def hx(id: Long): String =
-          md.digest(s"c22_$id".getBytes("UTF-8"))
-            .map("%02x".format(_)).mkString
         val batches = (0 until 2).map(b => gone
-          .filter(e => Integer.parseInt(hx(e.vec_id).take(2), 16) % 2 == b)
-          .sortBy(e => hx(e.vec_id)))
-        val in = MemoryStream[VectorStreams.Tombstone]
-        val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-        // noDataMicroBatches OFF for the replay (scoped set-and-restore,
-        // like the state-store partition sizing): every emission in
-        // these gates rides a DATA batch — arrival-time emission for
-        // joins/dedup/upserts, and the sentinel rounds exist precisely
-        // to advance the watermark WITH data where deferred emission is
-        // the semantics under test — so the bookkeeping micro-batch
-        // Spark appends after each processAllAvailable is a full
-        // state-store commit cycle that adds no rows. Production keeps
-        // the default (a live stream wants evictions without waiting
-        // for traffic); a bounded replay does not.
-        val savedNoData = s.conf.get(
-          "spark.sql.streaming.noDataMicroBatches.enabled")
-        val q =
-          try {
-            s.conf.set("spark.sql.shuffle.partitions", "4")
-            s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-              "false")
-            VectorStreams.forgetIngest(in.toDS(), root)
-              .option("checkpointLocation", s"$root/_ckpt").start()
-          } finally {
-            s.conf.set("spark.sql.shuffle.partitions", savedParts)
-            s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-              savedNoData)
-          }
-        try {
-          batches.foreach { b =>
-            if (b.nonEmpty) {
-              in.addData(b.toSeq)
-              q.processAllAvailable()
-            }
-          }
-        } finally q.stop()
+          .filter(e => md5Bucket("c22", e.vec_id, 2) == b)
+          .sortBy(e => md5Order("c22", e.vec_id)).toSeq)
+        replayStateful(s, batches)(
+          VectorStreams.forgetIngest(_, root)
+            .option("checkpointLocation", s"$root/_ckpt").start())
         val mc = new graft.compendium.ManifestCommit(s, root)
         import org.apache.spark.sql.functions.posexplode
         mc.read("centroids")
@@ -3020,15 +2558,7 @@ object RelationalQueries {
       "c15's partition-pruned CDC replay with every epoch's (base, view, marker) flipped in ONE manifest commit: no torn window, hash-equal to DuckDB's from-scratch fold",
       (s, d) => {
         import s.implicits._
-        implicit val sq = s.sqlContext
-        import graft.functions.Portable.h60
         import graft.streaming.EventStreams
-        import graft.streaming.EventStreams.CdcViewChange
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        val base = Tables.load(s, d, "orders")
-          .select(col("o_orderkey").as("k"), col("o_custkey").as("ck"),
-            expr("cast(floor(o_totalprice * 100 + 0.5) AS BIGINT)")
-              .as("cents"))
         // same harness bounds as c15: memoized feed (identical slice),
         // once-per-JVM seed template copied per run. The base loads as
         // ONE partition-granular manifest commit — the c15 seed
@@ -3038,22 +2568,11 @@ object RelationalQueries {
         // bootstraps from the full base aggregate on the first stream
         // epoch, exactly as the partitioned form does
         val feed = feedCdcCk(s, d)
-        val root = seededCkManifest(s, d, "c23", "c23_base")
-        val mc = new graft.compendium.ManifestCommit(s, root)
-        val in = MemoryStream[CdcViewChange]
-        val q = EventStreams
-          .ivmStreamPartitionedCommitted(in.toDS(), mc,
-            "c23_base", "c23_view", 16)
-          .start()
-        try {
-          (0L until 3L).foreach { b =>
-            val batch = feed.filter(_.k % 3 == b)
-            if (batch.nonEmpty) {
-              in.addData(batch.toSeq)
-              q.processAllAvailable()
-            }
-          }
-        } finally q.stop()
+        val mc = new graft.compendium.ManifestCommit(s,
+          seededCkManifest(s, d, "c23", "c23_base"))
+        replay(s, (0L until 3L).map(b => feed.filter(_.k % 3 == b).toSeq))(
+          EventStreams.ivmStreamPartitionedCommitted(_, mc,
+            "c23_base", "c23_view", 16).start())
         import org.apache.spark.sql.types._
         mc.readPartitionedAt(mc.current(), "c23_view",
             Some(StructType.fromDDL("ck BIGINT, n BIGINT, cents_total BIGINT")))
@@ -3064,21 +2583,7 @@ object RelationalQueries {
               StructField("cents_total", LongType)))))
           .select("ck", "n", "cents_total").orderBy("ck")
       },
-      Some(s"""WITH base AS (SELECT o_orderkey AS k, o_custkey AS ck,
-             |    CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
-             |  FROM orders),
-             |$sqlCdcResolved,
-             |rck AS (SELECT r.k, r.last_op, r.new_cents,
-             |    coalesce(b.ck,
-             |      ('0x' || substr(md5('nc_' || r.k), 1, 15))::BIGINT % 1000 + 1) AS ck
-             |  FROM resolved r LEFT JOIN base b ON r.k = b.k),
-             |applied AS (
-             |  SELECT b.k, b.ck, b.cents FROM base b
-             |  WHERE NOT EXISTS (SELECT 1 FROM rck r WHERE r.k = b.k)
-             |  UNION ALL
-             |  SELECT k, ck, new_cents AS cents FROM rck WHERE last_op <> 'D')
-             |SELECT ck, count(*)::BIGINT AS n, sum(cents)::BIGINT AS cents_total
-             |FROM applied GROUP BY ck ORDER BY ck""".stripMargin),
+      Some(sqlCkViewOracle),
       staticSchema = Some(org.apache.spark.sql.types.StructType.fromDDL(
         "ck BIGINT, n BIGINT, cents_total BIGINT"))),
 
@@ -3102,26 +2607,12 @@ object RelationalQueries {
       "LEFT-join view under two-sided CDC (fact re-keys, dim update/delete/insert incl. null-fill), partition-pruned epochs, one manifest flip — hash-equal to the from-scratch join",
       (s, d) => {
         import s.implicits._
-        implicit val sq = s.sqlContext
         import graft.streaming.EventStreams
-        import graft.streaming.EventStreams.CdcJoinChange
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
         val feed = feedJoinCdc(s, d, c25Variant = false)
-        val root = seededJoinTrio(s, d)
-        val mc = new graft.compendium.ManifestCommit(s, root)
-        val in = MemoryStream[CdcJoinChange]
-        val q = EventStreams
-          .ivmJoinStream(in.toDS(), mc, "c24_a", "c24_b", "c24_v", 16)
-          .start()
-        try {
-          (0L until 3L).foreach { b =>
-            val bt = feed.filter(_.key % 3 == b)
-            if (bt.nonEmpty) {
-              in.addData(bt.toSeq)
-              q.processAllAvailable()
-            }
-          }
-        } finally q.stop()
+        val mc = new graft.compendium.ManifestCommit(s, seededJoinTrio(s, d))
+        replay(s, (0L until 3L).map(b => feed.filter(_.key % 3 == b).toSeq))(
+          EventStreams.ivmJoinStream(_, mc, "c24_a", "c24_b", "c24_v", 16)
+            .start())
         import org.apache.spark.sql.types._
         val snap = mc.current()
         mc.readPartitionPathsAt(snap, "c24_v", "pck",
@@ -3135,19 +2626,7 @@ object RelationalQueries {
               StructField("rate", LongType)))))
           .select("k", "ck", "cents", "rate").orderBy("k")
       },
-      Some(s"""WITH base AS (SELECT o_orderkey AS k, o_custkey AS ck,
-             |    CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
-             |  FROM orders),
-             |$sqlCdcResolved,
-             |rck AS (SELECT r.k, r.last_op, r.new_cents,
-             |    coalesce(b.ck,
-             |      ('0x' || substr(md5('nc_' || r.k), 1, 15))::BIGINT % 1000 + 1) AS ck
-             |  FROM resolved r LEFT JOIN base b ON r.k = b.k),
-             |applied AS (
-             |  SELECT b.k, b.ck, b.cents FROM base b
-             |  WHERE NOT EXISTS (SELECT 1 FROM rck r WHERE r.k = b.k)
-             |  UNION ALL
-             |  SELECT k, ck, new_cents AS cents FROM rck WHERE last_op <> 'D'),
+      Some(s"""$sqlCkApplied,
              |cust AS (SELECT c_custkey AS ck,
              |    CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS rate
              |  FROM customer),
@@ -3189,10 +2668,7 @@ object RelationalQueries {
       "aggregate-over-join view under two-sided CDC: dim changes re-weight via the stored sufficient statistic (never a fact re-scan), hash-equal to the from-scratch aggregate",
       (s, d) => {
         import s.implicits._
-        implicit val sq = s.sqlContext
         import graft.streaming.EventStreams
-        import graft.streaming.EventStreams.CdcJoinChange
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
         // the c25 feed variant ([[feedJoinCdc]]): U-ops on k % 17 = 4
         // RE-KEY the fact one group over — cross-group moves (retract
         // from the old group, add to the new) exercised by the GATE
@@ -3200,21 +2676,11 @@ object RelationalQueries {
         // inserted dim's rate is BOUNDED (mod 1e5) so revenue_total
         // stays in long range at the sf1 decade
         val feed = feedJoinCdc(s, d, c25Variant = true)
-        val root = seededAggJoinTrio(s, d)
-        val mc = new graft.compendium.ManifestCommit(s, root)
-        val in = MemoryStream[CdcJoinChange]
-        val q = EventStreams
-          .ivmAggJoinStream(in.toDS(), mc, "c25_a", "c25_b", "c25_v", 16)
-          .start()
-        try {
-          (0L until 3L).foreach { b =>
-            val bt = feed.filter(_.key % 3 == b)
-            if (bt.nonEmpty) {
-              in.addData(bt.toSeq)
-              q.processAllAvailable()
-            }
-          }
-        } finally q.stop()
+        val mc = new graft.compendium.ManifestCommit(s,
+          seededAggJoinTrio(s, d))
+        replay(s, (0L until 3L).map(b => feed.filter(_.key % 3 == b).toSeq))(
+          EventStreams.ivmAggJoinStream(_, mc, "c25_a", "c25_b", "c25_v", 16)
+            .start())
         import org.apache.spark.sql.types._
         val snap = mc.current()
         mc.readPartitionPathsAt(snap, "c25_v", "pck",
@@ -3289,7 +2755,6 @@ object RelationalQueries {
       "c15's partition-granular CDC replay fed by FileStreamSource over staged parquet (no driver-side feed), hash-equal to the from-scratch fold",
       (s, d) => {
         import s.implicits._
-        import graft.functions.Portable.h60
         import graft.streaming.EventStreams
         import graft.streaming.EventStreams.CdcViewChange
         // The three epoch slices as a once-per-JVM FILE template (the
@@ -3304,8 +2769,7 @@ object RelationalQueries {
         // input to the stream; per run the driver drops the staged
         // files into the watched folder like any upstream producer.
         val slicesTmpl = c26SliceTemplate(s, d)
-        val root = java.nio.file.Files
-          .createTempDirectory("c26_stream").toString
+        val root = StoreFixture.scratch("c26_stream")
         val srcDir = s"$root/changes_in"
         // FileStreamSource resolves the path at stream start — the
         // watched folder must exist before the first file lands
@@ -3323,32 +2787,29 @@ object RelationalQueries {
           .ivmStreamPartitioned(changes, wh, "c26_base", "c26_view", 16)
           .option("checkpointLocation", s"$root/ckpt")
           .start()
-        try {
-          (0L until 3L).foreach { b =>
-            // one producer drop per epoch: the template's staged slice
-            // files land in the watched folder. The files are KEYED by
-            // the CDC key (the template's REBALANCE on k): the running
-            // query's trigger can list the folder MID-DROP and split a
-            // slice's files across micro-batches, and the IVM apply —
-            // like any CDC consumer — requires a key's changes to
-            // arrive in seq order ACROSS batches (within a batch
-            // resolveLastOp orders them); key-partitioned files make
-            // file-granular batching preserve that contract, the same
-            // per-key-ordering guarantee a partitioned CDC topic gives
-            // (an unkeyed write measurably split one key's seq-1/seq-2
-            // rows across two batches and applied them backwards).
-            // Names are uniquified per epoch (b-prefix); the stream's
-            // checkpoint is fresh per run, so template-name reuse
-            // across runs is invisible to the source's seen-files log.
-            val src = new java.io.File(s"$slicesTmpl/b$b")
-            src.listFiles().filter(_.getName.endsWith(".parquet"))
-              .sortBy(_.getName).foreach { f =>
-                java.nio.file.Files.copy(f.toPath,
-                  java.nio.file.Paths.get(s"$srcDir/b${b}_${f.getName}")): Unit
-              }
-            q.processAllAvailable()
-          }
-        } finally q.stop()
+        drain(q, (0L until 3L).iterator) { b =>
+          // one producer drop per epoch: the template's staged slice
+          // files land in the watched folder. The files are KEYED by
+          // the CDC key (the template's REBALANCE on k): the running
+          // query's trigger can list the folder MID-DROP and split a
+          // slice's files across micro-batches, and the IVM apply —
+          // like any CDC consumer — requires a key's changes to
+          // arrive in seq order ACROSS batches (within a batch
+          // resolveLastOp orders them); key-partitioned files make
+          // file-granular batching preserve that contract, the same
+          // per-key-ordering guarantee a partitioned CDC topic gives
+          // (an unkeyed write measurably split one key's seq-1/seq-2
+          // rows across two batches and applied them backwards).
+          // Names are uniquified per epoch (b-prefix); the stream's
+          // checkpoint is fresh per run, so template-name reuse
+          // across runs is invisible to the source's seen-files log.
+          val src = new java.io.File(s"$slicesTmpl/b$b")
+          src.listFiles().filter(_.getName.endsWith(".parquet"))
+            .sortBy(_.getName).foreach { f =>
+              java.nio.file.Files.copy(f.toPath,
+                java.nio.file.Paths.get(s"$srcDir/b${b}_${f.getName}")): Unit
+            }
+        }
         if (!wh.exists("c26_view"))
           EventStreams.applyIvmBatchPartitioned(
             s.emptyDataset[CdcViewChange].toDF(),
@@ -3360,21 +2821,7 @@ object RelationalQueries {
             StructField("cents_total", LongType))))
           .select("ck", "n", "cents_total").orderBy("ck")
       },
-      Some(s"""WITH base AS (SELECT o_orderkey AS k, o_custkey AS ck,
-             |    CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
-             |  FROM orders),
-             |$sqlCdcResolved,
-             |rck AS (SELECT r.k, r.last_op, r.new_cents,
-             |    coalesce(b.ck,
-             |      ('0x' || substr(md5('nc_' || r.k), 1, 15))::BIGINT % 1000 + 1) AS ck
-             |  FROM resolved r LEFT JOIN base b ON r.k = b.k),
-             |applied AS (
-             |  SELECT b.k, b.ck, b.cents FROM base b
-             |  WHERE NOT EXISTS (SELECT 1 FROM rck r WHERE r.k = b.k)
-             |  UNION ALL
-             |  SELECT k, ck, new_cents AS cents FROM rck WHERE last_op <> 'D')
-             |SELECT ck, count(*)::BIGINT AS n, sum(cents)::BIGINT AS cents_total
-             |FROM applied GROUP BY ck ORDER BY ck""".stripMargin),
+      Some(sqlCkViewOracle),
       staticSchema = Some(org.apache.spark.sql.types.StructType.fromDDL(
         "ck BIGINT, n BIGINT, cents_total BIGINT"))),
 
@@ -3399,35 +2846,17 @@ object RelationalQueries {
       "status-upsert workload: 4 bucket-confined CDC epochs over partition-granular stores — each epoch reads/writes exactly one of 16 partitions, hash-equal to the from-scratch fold",
       (s, d) => {
         import s.implicits._
-        implicit val sq = s.sqlContext
         import graft.streaming.EventStreams
-        import graft.streaming.EventStreams.CdcViewChange
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        val base = Tables.load(s, d, "orders")
-          .select(col("o_orderkey").as("k"),
-            expr("cast(floor(o_totalprice * 100 + 0.5) AS BIGINT)")
-              .as("cents"))
         // point-group view: every entity its own group (ck = k) — the
         // status-table shape, where an upsert touches one row of one
         // partition
         val feed = feedCdcPoint(s, d)
-        val root = seededPointStore(s, d, "c27", "c27_base", "c27_view")
-        val mc = new graft.compendium.ManifestCommit(s, root)
-        val in = MemoryStream[CdcViewChange]
-        val q = EventStreams
-          .ivmStreamPartitionedCommitted(in.toDS(), mc,
-            "c27_base", "c27_view", 16)
-          .start()
-        try {
-          // the clustering: epoch e's changes live entirely in bucket e
-          (0L until 4L).foreach { e =>
-            val batch = feed.filter(_.k % 16 == e)
-            if (batch.nonEmpty) {
-              in.addData(batch.toSeq)
-              q.processAllAvailable()
-            }
-          }
-        } finally q.stop()
+        val mc = new graft.compendium.ManifestCommit(s,
+          seededPointStore(s, d, "c27", "c27_base", "c27_view"))
+        // the clustering: epoch e's changes live entirely in bucket e
+        replay(s, (0L until 4L).map(e => feed.filter(_.k % 16 == e).toSeq))(
+          EventStreams.ivmStreamPartitionedCommitted(_, mc,
+            "c27_base", "c27_view", 16).start())
         import org.apache.spark.sql.types._
         mc.readPartitionedAt(mc.current(), "c27_view",
             Some(StructType.fromDDL("ck BIGINT, n BIGINT, cents_total BIGINT")))
@@ -3480,35 +2909,19 @@ object RelationalQueries {
       "mid-replay snapshot read: the view AS OF a captured manifest version, after a later epoch committed — hash-equal to the fold of exactly the first two epochs",
       (s, d) => {
         import s.implicits._
-        implicit val sq = s.sqlContext
         import graft.streaming.EventStreams
-        import graft.streaming.EventStreams.CdcViewChange
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        val base = Tables.load(s, d, "orders")
-          .select(col("o_orderkey").as("k"),
-            expr("cast(floor(o_totalprice * 100 + 0.5) AS BIGINT)")
-              .as("cents"))
         val feed = feedCdcPoint(s, d)
-        val root = seededPointStore(s, d, "c29", "c29_base", "c29_view")
-        val mc = new graft.compendium.ManifestCommit(s, root, retain = 8)
-        val in = MemoryStream[CdcViewChange]
-        val q = EventStreams
-          .ivmStreamPartitionedCommitted(in.toDS(), mc,
-            "c29_base", "c29_view", 16)
-          .start()
+        val mc = new graft.compendium.ManifestCommit(s,
+          seededPointStore(s, d, "c29", "c29_base", "c29_view"), retain = 8)
         var vMid = 0L
-        try {
-          (0L until 3L).foreach { e =>
-            val batch = feed.filter(_.k % 16 == e)
-            if (batch.nonEmpty) {
-              in.addData(batch.toSeq)
-              q.processAllAvailable()
-            }
-            // the snapshot: whatever version the store is at once
-            // epochs 0 and 1 are folded — epoch 2 commits AFTER it
-            if (e == 1L) vMid = mc.currentVersion().get
-          }
-        } finally q.stop()
+        // the snapshot: whatever version the store is at once epochs 0
+        // and 1 are folded — the replay pulls epoch 2's batch only after
+        // draining epoch 1, so epoch 2 commits AFTER it
+        replay(s, Iterator(0L, 1L, 2L).map { e =>
+          if (e == 2L) vMid = mc.currentVersion().get
+          feed.filter(_.k % 16 == e).toSeq
+        })(EventStreams.ivmStreamPartitionedCommitted(_, mc,
+          "c29_base", "c29_view", 16).start())
         // the AS-OF read: resolve the PINNED manifest, not current()
         // — the read path (pruned multi-path scan) is otherwise
         // identical; epoch 2's commit must be invisible through it
@@ -3736,13 +3149,6 @@ object RelationalQueries {
         col("n_ops"))
   }
 
-  /** The RAW md5-derived change feed (k, seq, op, new_cents) behind
-    * [[cdcResolved]] — exposed unresolved so c12 can replay it through
-    * the STREAMING apply (which owns its own last-op-wins resolution,
-    * [[graft.compendium.Warehouse.resolveLastOp]]). Keys: ~1/7 of base
-    * keys change (c1), ~1/3 of those change twice out of order (c2),
-    * and base keys ≡ 0 (mod 3) spawn a brand-new key +1e9 (c3).
-    */
   /** The orders-derived (k, ck, cents) base frame every CDC/IVM gate
     * maintains a store over — one definition so the seed templates and
     * the gates can never drift.
@@ -3771,6 +3177,86 @@ object RelationalQueries {
     }
   }
 
+  /** The bounded replay every MemoryStream gate runs: `start` builds the
+    * streaming query over a fresh MemoryStream, then each NON-EMPTY batch
+    * becomes one micro-batch, drained before the next is added, and the
+    * query stops in a finally. Batches are pulled lazily, so an Iterator
+    * may look at the store between two epochs (c29's mid-replay
+    * snapshot). The stateless IVM gates come here directly and keep the
+    * session's partitioning; stateful ones go through [[replayStateful]].
+    */
+  private def replay[T: Encoder](s: SparkSession,
+      batches: IterableOnce[Seq[T]])(start: Dataset[T] => StreamingQuery)
+      : Unit = {
+    implicit val sq: SQLContext = s.sqlContext
+    val in = MemoryStream[T]
+    drain(start(in.toDS()), batches.iterator.filter(_.nonEmpty))(
+      in.addData(_): Unit)
+  }
+
+  /** [[replay]] for the stateful gates, with the bounded-replay conf set
+    * around the query's start (the conf is read once there, so the
+    * session gets its own values back right after):
+    *  - 4 shuffle partitions: a stateful operator creates one state-store
+    *    instance per shuffle partition PER MICRO-BATCH (streaming is
+    *    exempt from AQE coalescing), and gate state is slice-sized — at
+    *    the session's 32 partitions the replay spends its time on state
+    *    file churn, not data;
+    *  - no-data micro-batches off: every emission in these gates rides a
+    *    DATA batch — arrival-time emission for joins/dedup/upserts, and
+    *    the sentinel rounds exist precisely to advance the watermark WITH
+    *    data where deferred emission is the semantics under test — so
+    *    the bookkeeping micro-batch Spark appends after each drain is a
+    *    full state-store commit cycle that adds no rows. Production keeps
+    *    the default (a live stream wants evictions without waiting for
+    *    traffic); a bounded replay does not.
+    */
+  private def replayStateful[T: Encoder](s: SparkSession,
+      batches: IterableOnce[Seq[T]])(start: Dataset[T] => StreamingQuery)
+      : Unit =
+    replay(s, batches) { ds =>
+      graft.core.ScopedConf(s, "spark.sql.shuffle.partitions" -> "4",
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")(
+        start(ds))
+    }
+
+  /** Drives `q` over `steps`: `feed` hands the source one step's data,
+    * then the query processes everything available; `q` stops in a
+    * finally. */
+  private def drain[B](q: StreamingQuery, steps: Iterator[B])(
+      feed: B => Unit): Unit =
+    try steps.foreach { b => feed(b); q.processAllAvailable() }
+    finally q.stop()
+
+  /** The md5 batch ordering of the shuffled replays: sorting by
+    * `md5Order(gate, id)` scrambles a slice, `md5Bucket` scatters it over
+    * `n` batches (floorMod of the digest's leading byte, signed). */
+  private def md5Order(gate: String, id: Long): String =
+    graft.functions.Portable.md5HexScala(s"${gate}_$id")
+
+  private def md5Bucket(gate: String, id: Long, n: Int): Int =
+    math.floorMod(
+      Integer.parseInt(md5Order(gate, id).take(2), 16).toByte.toInt, n)
+
+  /** `xs` in three contiguous batches (fewer when it has < 3 rows). */
+  private def thirds[T](xs: Seq[T]): Seq[Seq[T]] =
+    xs.grouped(math.max((xs.length + 2) / 3, 1)).toSeq
+
+  /** Two far-future flush rounds after `slice` (none for an empty one):
+    * sentinel 1, `first` days past the last event, advances the
+    * watermark; sentinel 2, `second` days past it, triggers the batch
+    * that fires what the first armed. Negative ids and users keep them
+    * off real output. */
+  private def flushRounds(slice: Seq[Event], first: Long, second: Long)
+      : Seq[Seq[Event]] =
+    if (slice.isEmpty) Nil
+    else {
+      val lastTs = slice.map(_.ts.getTime).max
+      def at(days: Long) = new java.sql.Timestamp(lastTs + days * 86400000L)
+      Seq(Seq(Event(-1L, at(first), -998L, "flush", 0.0)),
+        Seq(Event(-2L, at(second), -999L, "flush", 0.0)))
+    }
+
   /** The c22 embedding projection (vec_id, clabel, v) its seed and
     * tombstone feed both derive from.
     */
@@ -3794,13 +3280,9 @@ object RelationalQueries {
   /** A fresh copy of c14's epoch-0 snapshot store — template per JVM. */
   private def seededC14Store(s: SparkSession, d: String): String =
     graft.core.SeededStore("c14", d) { p =>
-      val base = Tables.load(s, d, "orders")
-        .select(col("o_orderkey").as("k"),
-          expr("cast(floor(o_totalprice * 100 + 0.5) AS BIGINT)")
-            .as("cents"))
       new graft.compendium.Warehouse(s, p).applyCdcPartitioned("c14_snap",
-        base.select(col("k"), lit(0L).as("seq"), lit("I").as("op"),
-          col("cents")),
+        ordersCkBase(s, d).select(col("k"), lit(0L).as("seq"),
+          lit("I").as("op"), col("cents")),
         "k", "seq", "op", "pk", c => pmod(c, lit(16L)))
     }
 
@@ -3815,49 +3297,44 @@ object RelationalQueries {
     }
   }
 
-  /** The c15/c23 collected CDC slice (ck from the base row, md5-derived
-    * for new keys), memoized once per JVM ([[graft.core.FeedCache]]).
+  /** The c12-family CDC feed (k, seq, op, ck, cents), also c24/c25's
+    * fact side: ck from the base row, md5-derived for new keys — what
+    * [[sqlCkApplied]]'s `rck` CTE recomputes.
+    */
+  private def cdcCkFeed(s: SparkSession, d: String): DataFrame = {
+    import graft.functions.Portable.h60
+    val base = ordersCkBase(s, d)
+    cdcChanges(base.select(col("k")))
+      .join(base.select("k", "ck"), Seq("k"), "left")
+      .select(col("k"), col("seq"), col("op"),
+        coalesce(col("ck"),
+          h60(concat(lit("nc_"), col("k").cast("string"))) % 1000 + 1)
+          .as("ck"),
+        col("new_cents").as("cents"))
+  }
+
+  /** [[cdcCkFeed]] collected for the MemoryStream gates (c12/c15/c23),
+    * memoized once per JVM ([[graft.core.FeedCache]]).
     */
   private def feedCdcCk(s: SparkSession, d: String)
       : Array[graft.streaming.EventStreams.CdcViewChange] = {
     import s.implicits._
-    import graft.functions.Portable.h60
     graft.core.FeedCache("cdc_ck", d) {
-      val base = ordersCkBase(s, d)
-      cdcChanges(base.select(col("k")))
-        .join(base.select("k", "ck"), Seq("k"), "left")
-        .select(col("k"), col("seq"), col("op"),
-          coalesce(col("ck"),
-            h60(concat(lit("nc_"), col("k").cast("string"))) % 1000 + 1)
-            .as("ck"),
-          col("new_cents").as("cents"))
-        .as[graft.streaming.EventStreams.CdcViewChange]
+      cdcCkFeed(s, d).as[graft.streaming.EventStreams.CdcViewChange]
         .collect()
     }
   }
 
-  /** c26's three epoch slice files as a once-per-JVM template (the
-    * SeededStore/FeedCache discipline on the FILE feed): same
-    * REBALANCE-by-k clustered write as the original inline form — the
-    * same-key-same-file contract the mid-write-race fix requires holds
-    * file-for-file — built once; each gate run drops copies into its
-    * watched folder like any upstream producer.
+  /** c26's three epoch slice files of [[cdcCkFeed]] as a once-per-JVM
+    * template (the SeededStore/FeedCache discipline on the FILE feed):
+    * one REBALANCE-by-k clustered write per slice — the
+    * same-key-same-file contract the mid-write-race fix requires — built
+    * once; each gate run drops copies into its watched folder like any
+    * upstream producer.
     */
   private def c26SliceTemplate(s: SparkSession, d: String): String =
     graft.core.StoreFixture("c26_slices", d) { p =>
-      import graft.functions.Portable.h60
-      val base = Tables.load(s, d, "orders")
-        .select(col("o_orderkey").as("k"), col("o_custkey").as("ck"),
-          expr("cast(floor(o_totalprice * 100 + 0.5) AS BIGINT)")
-            .as("cents"))
-      val raw = cdcChanges(base.select(col("k")))
-      val feed = raw.join(base.select("k", "ck"), Seq("k"), "left")
-        .select(col("k"), col("seq"), col("op"),
-          coalesce(col("ck"),
-            h60(concat(lit("nc_"), col("k").cast("string"))) % 1000 + 1)
-            .as("ck"),
-          col("new_cents").as("cents"))
-        .localCheckpoint(true)
+      val feed = cdcCkFeed(s, d).localCheckpoint(true)
       (0L until 3L).foreach { b =>
         feed.filter(col("k") % 3 === b).hint("rebalance", col("k"))
           .write.mode("overwrite").parquet(s"$p/b$b")
@@ -3920,8 +3397,7 @@ object RelationalQueries {
   }
 
   /** The c24/c25 two-sided CDC feed, memoized per JVM. Fact side:
-    * [[cdcChanges]] with ck from the base row (md5-derived for new
-    * keys); dim side: %50=3 INSERTs (the null-fill), %11=5 DELETEs,
+    * [[cdcCkFeed]]; dim side: %50=3 INSERTs (the null-fill), %11=5 DELETEs,
     * %7=2 re-rates. The c25 variant differs twice: U-ops on k % 17 = 4
     * RE-KEY the fact one group over (cross-group moves exercised by
     * the gate itself), and the inserted dim's rate derives from ck
@@ -3932,20 +3408,16 @@ object RelationalQueries {
   private def feedJoinCdc(s: SparkSession, d: String, c25Variant: Boolean)
       : Array[graft.streaming.EventStreams.CdcJoinChange] = {
     import s.implicits._
-    import graft.functions.Portable.h60
     graft.core.FeedCache(if (c25Variant) "c25" else "c24", d) {
-      val (base, cust, _) = joinDimFrames(s, d)
-      val raw = cdcChanges(base.select(col("k")))
-      val ckOf = coalesce(col("ck"),
-        h60(concat(lit("nc_"), col("k").cast("string"))) % 1000 + 1)
-      val feedA = raw.join(base.select("k", "ck"), Seq("k"), "left")
+      val (_, cust, _) = joinDimFrames(s, d)
+      val feedA = cdcCkFeed(s, d)
         .select(lit("A").as("side"), col("k").as("key"), col("seq"),
           col("op"),
           (if (c25Variant)
-            ckOf + when(col("op") === "U" && col("k") % 17 === 4, 1L)
+            col("ck") + when(col("op") === "U" && col("k") % 17 === 4, 1L)
               .otherwise(0L)
-          else ckOf).as("ck"),
-          col("new_cents").as("amt"))
+          else col("ck")).as("ck"),
+          col("cents").as("amt"))
       val insRate =
         if (c25Variant) (col("ck") % 100000) * 3 else col("ck") * 3
       val feedB = cust
@@ -4026,6 +3498,13 @@ object RelationalQueries {
     c22SeededStore(s, d); seededC14Store(s, d): Unit
   }
 
+  /** The RAW md5-derived change feed (k, seq, op, new_cents) behind
+    * [[cdcResolved]] — exposed unresolved so c12 can replay it through
+    * the STREAMING apply (which owns its own last-op-wins resolution,
+    * [[graft.compendium.Warehouse.resolveLastOp]]). Keys: ~1/7 of base
+    * keys change (c1), ~1/3 of those change twice out of order (c2),
+    * and base keys ≡ 0 (mod 3) spawn a brand-new key +1e9 (c3).
+    */
   private[graft] def cdcChanges(base: DataFrame): DataFrame = {
     import graft.functions.Portable.h60
     val keys = base.select(col("k")).filter(col("k") % 7 === 3)
@@ -4079,6 +3558,34 @@ object RelationalQueries {
       |      ORDER BY seq DESC, new_cents DESC, op DESC) AS rn,
       |    count(*) OVER (PARTITION BY k)::BIGINT AS n_ops
       |  FROM changes) WHERE rn = 1)""".stripMargin
+
+  /** Oracle CTE chain of the c12 family: DuckDB's from-scratch apply of
+    * [[cdcCkFeed]] to `base(k, ck, cents)` — the resolved feed, `rck`
+    * (ck from the base row, md5-derived for new keys) and the `applied`
+    * snapshot, which [[sqlCkViewOracle]] folds and c24 joins its dim to.
+    */
+  private def sqlCkApplied: String =
+    s"""WITH base AS (SELECT o_orderkey AS k, o_custkey AS ck,
+       |    CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
+       |  FROM orders),
+       |$sqlCdcResolved,
+       |rck AS (SELECT r.k, r.last_op, r.new_cents,
+       |    coalesce(b.ck,
+       |      ('0x' || substr(md5('nc_' || r.k), 1, 15))::BIGINT % 1000 + 1) AS ck
+       |  FROM resolved r LEFT JOIN base b ON r.k = b.k),
+       |applied AS (
+       |  SELECT b.k, b.ck, b.cents FROM base b
+       |  WHERE NOT EXISTS (SELECT 1 FROM rck r WHERE r.k = b.k)
+       |  UNION ALL
+       |  SELECT k, ck, new_cents AS cents FROM rck WHERE last_op <> 'D')""".stripMargin
+
+  /** The per-ck view c12, c15, c23 and c26 maintain, recomputed from
+    * scratch — one oracle, so the four stream twins are graded against
+    * the same fold. */
+  private def sqlCkViewOracle: String =
+    s"""$sqlCkApplied
+       |SELECT ck, count(*)::BIGINT AS n, sum(cents)::BIGINT AS cents_total
+       |FROM applied GROUP BY ck ORDER BY ck""".stripMargin
 
   /** q47's histogram cells over any (event_type, value) frame —
     * (event_type, bucket_lo, width, cnt), shared with the streaming twin

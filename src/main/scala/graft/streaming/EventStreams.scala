@@ -494,16 +494,8 @@ object EventStreams extends Serializable {
     * ORIGINAL session — the conf must scope on the latter.
     */
   private def withPackedScans[T](s: org.apache.spark.sql.SparkSession)(
-      body: => T): T = {
-    val k = "spark.sql.files.minPartitionNum"
-    val prev = s.conf.getOption(k)
-    s.conf.set(k, "1")
-    try body
-    finally prev match {
-      case Some(v) => s.conf.set(k, v)
-      case None    => s.conf.unset(k)
-    }
-  }
+      body: => T): T =
+    graft.core.ScopedConf(s, "spark.sql.files.minPartitionNum" -> "1")(body)
 
   private[graft] def applyIvmBatch(batch: DataFrame,
       wh: graft.compendium.Warehouse, baseTable: String, viewTable: String,

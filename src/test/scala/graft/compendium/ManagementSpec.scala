@@ -105,6 +105,37 @@ class ManagementSpec extends SparkTestBase {
     assert(!Files.exists(Paths.get(s"$projRoot/$p/ASVs.fa")))
   }
 
+  test("re-run end to end: the single-end pass saves once and ends done") {
+    val (deps, _, projRoot) = mkDeps()
+    val p = "PRJ_RERUN_SE"
+    def status(): String =
+      deps.wh.read("status").collect().head.getAs[String]("status")
+    writeSummary(s"$projRoot/$p",
+      (1 to 2).map(i => goodRow(s"SRR00$i")) ++
+        (3 to 4).map(i => badMergedRow(s"SRR00$i")))
+    copyResults(s"$projRoot/$p")
+    StateMachine.initialize(spark, deps.wh, p)
+    StateMachine.setStatus(spark, deps.wh, p, "accession_list_created")
+    StateMachine.setStatus(spark, deps.wh, p, "running")
+
+    assert(Management.autoforward(spark, deps)("advanced_re_run") === Seq(p))
+    // the relaunched single-end pass is in flight
+    assert(status() === "to_re_run")
+
+    // its outputs land: a single-end summary (no revse/merged) + results
+    Files.writeString(Paths.get(s"$projRoot/$p/summary.tsv"),
+      "\tdinput\tfilter\tdenoised\tlength\tnonchim\n" +
+        (1 to 4).map(i => s"SRR00${i}_1.fastq\t50000\t48000\t46000\t43000\t42000")
+          .mkString("", "\n", "\n"))
+    copyResults(s"$projRoot/$p")
+    assert(Management.autoforward(spark, deps)("advanced_save") === Seq(p))
+    val counts = deps.wh.read("asv_counts").count()
+    assert(counts === 5)
+    assert(Management.autoforward(spark, deps)("advanced_save").isEmpty)
+    assert(deps.wh.read("asv_counts").count() === counts)
+    assert(status() === "done")
+  }
+
   test("autoforward fills capacity from the admission band") {
     val (deps0, launcher, projRoot) = mkDeps()
     val deps = deps0.copy(cfg = deps0.cfg.copy(

@@ -130,4 +130,46 @@ class RegionInferenceSpec extends SparkTestBase {
     assert(n2 === 0) // all inferred → J2 selects nothing
     assert(wh.read("asv_inference").count() === 2)
   }
+
+  test("inferMissing runs the alignment stage once per call") {
+    import org.apache.spark.scheduler._
+    import spark.implicits._
+    val wh = new Warehouse(spark, tmpDir())
+    wh.append("asv_sequences", Seq(
+      (1L, "P1", "ASV_1", g.substring(560, 720)),
+      (2L, "P2", "ASV_1", g.substring(420, 700))
+    ).toDF("asv_id", "project", "asv", "seq"))
+    // an alignment stage runs the mapGroups over the project-shuffled
+    // ASVs, reading that shuffle; a stage that reads a cached result
+    // lists the same RDD as an ancestor but reads no shuffle rows
+    val alignStages = new java.util.concurrent.atomic.AtomicInteger
+    val markerJob = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val i = e.stageInfo
+        if (i.rddInfos.exists(_.scope.exists(_.name == "MapGroups")) &&
+            i.taskMetrics.shuffleReadMetrics.recordsRead > 0)
+          alignStages.incrementAndGet(): Unit
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.job.description") == "drain marker"))
+          markerJob.set(e.jobId)
+      // a listener sees events in order: once the marker job has ended,
+      // every stage of the call before it has been counted
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob.get) drained.countDown()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(RegionInference.inferMissing(spark, wh, budget = 10) === 2)
+      spark.sparkContext.setJobDescription("drain marker")
+      spark.range(1).count()
+      spark.sparkContext.setJobDescription(null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(alignStages.get === 1)
+    assert(wh.read("asv_inference").count() === 2)
+  }
 }
