@@ -43,7 +43,7 @@ final class Warehouse(spark: SparkSession, root: String) {
     * driver-side footer inference on EVERY DataFrame creation (~85 ms
     * warm at sf0.1 — a per-epoch tax on the IVM appliers, which read
     * each store once per micro-batch). Every write path below records
-    * the on-disk schema it just produced (data columns in frame order,
+    * the on-disk schema it leaves behind (data columns in frame order,
     * partition columns appended — the same order inference returns), so
     * steady-state reads infer nothing. Correctness: the memo is updated
     * at every mutation of the table, and a fresh Warehouse instance
@@ -53,15 +53,43 @@ final class Warehouse(spark: SparkSession, root: String) {
   private val schemaMemo = new scala.collection.concurrent.TrieMap[
     String, org.apache.spark.sql.types.StructType]()
 
-  private def memoWrite(table: String, df: DataFrame,
-      partitionCols: Seq[String] = Nil): Unit = {
+  private def onDisk(df: DataFrame, partitionCols: Seq[String]) = {
     val s = df.schema
-    val onDisk =
-      if (partitionCols.isEmpty) s
-      else org.apache.spark.sql.types.StructType(
-        s.fields.filterNot(f => partitionCols.contains(f.name)) ++
-          partitionCols.map(c => s(c)))
-    schemaMemo.put(table, onDisk): Unit
+    if (partitionCols.isEmpty) s
+    else org.apache.spark.sql.types.StructType(
+      s.fields.filterNot(f => partitionCols.contains(f.name)) ++
+        partitionCols.map(c => s(c)))
+  }
+
+  /** A full rewrite: `df` is now the whole table. */
+  private def memoWrite(table: String, df: DataFrame,
+      partitionCols: Seq[String] = Nil): Unit =
+    schemaMemo.put(table, onDisk(df, partitionCols)): Unit
+
+  /** Whether the memo covers every column already on disk: it has an
+    * entry, or there is no table yet. Taken before a write that keeps
+    * the table's other files.
+    */
+  private def memoCovers(table: String): Boolean =
+    schemaMemo.contains(table) || !exists(table)
+
+  /** A write that keeps the table's other files (append, dynamic
+    * partition overwrite): the table now holds the union of their
+    * columns and `df`'s, so the memo merges by name — `df`'s columns,
+    * then the ones only the memo had — and a narrower frame never
+    * narrows the table. Where the memo did not cover the files already
+    * there, it stays unset and the next read infers.
+    */
+  private def memoMerge(table: String, df: DataFrame,
+      partitionCols: Seq[String], covered: Boolean): Unit = if (covered) {
+    val s = onDisk(df, partitionCols)
+    val merged = schemaMemo.get(table).fold(s) { prev =>
+      val (parts, data) = (s.fields ++
+        prev.fields.filterNot(f => s.fieldNames.contains(f.name)))
+        .partition(f => partitionCols.contains(f.name))
+      org.apache.spark.sql.types.StructType(data ++ parts)
+    }
+    schemaMemo.put(table, merged): Unit
   }
 
   def read(table: String): DataFrame = {
@@ -86,10 +114,11 @@ final class Warehouse(spark: SparkSession, root: String) {
     * project's partition — idempotent re-runs, no cross-project rewrite.
     */
   def append(table: String, df: DataFrame, partitionCols: Seq[String] = Nil): Unit = {
+    val covered = memoCovers(table)
     val w = df.write.mode(SaveMode.Append)
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(path(table))
-    memoWrite(table, df, partitionCols)
+    memoMerge(table, df, partitionCols, covered)
   }
 
   /** Appends `df` unless it is empty and returns its row count, running
@@ -126,12 +155,13 @@ final class Warehouse(spark: SparkSession, root: String) {
     * for, at any scale.
     */
   def overwritePartitions(table: String, df: DataFrame, partitionCols: Seq[String]): Unit = {
+    val covered = memoCovers(table)
     df.hint("rebalance", partitionCols.map(col): _*)
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*)
       .parquet(path(table))
-    memoWrite(table, df, partitionCols)
+    memoMerge(table, df, partitionCols, covered)
   }
 
   /** The on-disk directory name Spark's writer gives one partition value —

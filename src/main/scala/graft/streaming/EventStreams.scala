@@ -551,12 +551,12 @@ object EventStreams extends Serializable {
       else wh.readOrEmpty(viewTable, viewSchema)
     // (view ⋉ delta) ⟗ delta decomposed into broadcast-joinable legs
     // (full outer cannot broadcast-hash; guide §3.1): matched view rows
-    // merge in place, delta-only groups append with zeroed view state —
-    // the view scan itself never shuffles, only the change-sized delta
-    // moves (twice as a broadcast, once — keys only — through the anti).
+    // merge in place, delta-only groups append with zeroed view state
+    // through delta ▷ view keys. A left anti join can build only its
+    // right side, so that leg broadcasts the view's key column (or
+    // sort-merges it with the delta, past the broadcast threshold).
     val touched = view.join(broadcast(delta), Seq("ck"), "inner")
-      .unionByName(delta.hint("shuffle_hash")
-        .join(view.select("ck"), Seq("ck"), "left_anti")
+      .unionByName(delta.join(view.select("ck"), Seq("ck"), "left_anti")
         .select(col("ck"), lit(null).cast("long").as("n"),
           lit(null).cast("long").as("cents_total"),
           col("d_cents"), col("d_n")))
@@ -731,10 +731,10 @@ object EventStreams extends Serializable {
     // cannot broadcast-hash; guide §3.1): prev (store-partition-sized —
     // must never shuffle) left-joins the broadcast change-sized delta;
     // groups born this epoch append through a keys-only anti join (the
-    // only prev bytes that move are its group keys, guide §2.3).
+    // only prev bytes that move are its group keys, guide §2.3 — the
+    // anti join's build side, as a left anti join builds its right).
     prev.join(broadcast(delta), Seq("ck"), "left")
-      .unionByName(delta.hint("shuffle_hash")
-        .join(prev.select("ck"), Seq("ck"), "left_anti")
+      .unionByName(delta.join(prev.select("ck"), Seq("ck"), "left_anti")
         .select(col("ck"), lit(null).cast("long").as("n"),
           lit(null).cast("long").as("cents_total"),
           col("d_cents"), col("d_n")))
@@ -1412,13 +1412,13 @@ object EventStreams extends Serializable {
     // full outer decomposed into broadcast-joinable legs (guide §3.1):
     // existing groups (incl. partition-mates) left-join the broadcast
     // change-sized delta; groups born this epoch append through a
-    // keys-only anti join — the pruned view partitions are scanned,
-    // never shuffled, and the dim attaches (rb, bNow — change/dim-
-    // partition-bounded) broadcast too.
+    // keys-only anti join, whose build side is the pruned view's key
+    // column (a left anti join builds its right) — the pruned view
+    // partitions are scanned, never shuffled, and the dim attaches
+    // (rb, bNow — change/dim-partition-bounded) broadcast too.
     val merged = vPruned
       .join(broadcast(delta), Seq("ck"), "left")
-      .unionByName(delta.hint("shuffle_hash")
-        .join(vPruned.select("ck"), Seq("ck"), "left_anti")
+      .unionByName(delta.join(vPruned.select("ck"), Seq("ck"), "left_anti")
         .select(col("ck"), lit(null).cast("long").as("n"),
           lit(null).cast("long").as("cents_total"),
           lit(null).cast("long").as("rate"),

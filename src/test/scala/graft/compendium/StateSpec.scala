@@ -147,6 +147,28 @@ class SelectionSpec extends SparkTestBase {
   }
 }
 
+class WarehouseSchemaSpec extends SparkTestBase {
+  import spark.implicits._
+
+  test("appending a narrower frame never narrows the table") {
+    val wh = new Warehouse(spark, tmpDir())
+    wh.append("flat", Seq((1L, "a", 10.0)).toDF("k", "s", "x"))
+    wh.append("flat", Seq((2L, "b")).toDF("k", "s"))
+    val flat = wh.read("flat")
+    assert(flat.columns.toSeq === Seq("k", "s", "x"))
+    assert(flat.orderBy("k").as[(Long, String, Option[Double])].collect()
+      .toSeq === Seq((1L, "a", Some(10.0)), (2L, "b", None)))
+
+    wh.append("part", Seq(("P1", 1L, 5L)).toDF("project", "k", "n"),
+      Seq("project"))
+    wh.append("part", Seq(("P2", 2L)).toDF("project", "k"), Seq("project"))
+    val part = wh.read("part")
+    assert(part.columns.toSeq === Seq("k", "n", "project"))
+    assert(part.orderBy("k").as[(Long, Option[Long], String)].collect()
+      .toSeq === Seq((1L, Some(5L), "P1"), (2L, None, "P2")))
+  }
+}
+
 class WarehouseCdcPartitionedSpec extends graft.SparkTestBase {
   import spark.implicits._
   import org.apache.spark.sql.functions._
