@@ -64,10 +64,10 @@ object Cli {
       case "again" =>
         require(args.length >= 2, "again requires <project>")
         d.launcher.launch(args(1), rerunAsSingleEnd = false)
-        StateMachine.setStatus(spark, d.wh, args(1), "running")
+        StateMachine.setStatus(d.wh, args(1), "running")
       case "discard" =>
         require(args.length >= 3, "discard requires <project> <reason>")
-        StateMachine.setStatus(spark, d.wh, args(1), "failed",
+        StateMachine.setStatus(d.wh, args(1), "failed",
           note1 = Some(args(2)))
         d.ws.delete(args(1))
       case "status" | "eval" =>
@@ -83,7 +83,7 @@ object Cli {
           d.wh.readOrEmpty("asv_counts", Schemas.asvCounts))
           .show(truncate = false)
       case "summary" =>
-        val part = Management.determineProjects(spark, d)
+        val part = Management.determineProjects(d)
         println(s"done: ${part.done.mkString(",")}")
         println(s"running: ${part.running.mkString(",")}")
         println(s"not_done: ${part.notDone.mkString(",")}")

@@ -35,8 +35,11 @@ trait PipelineLauncher {
 /** The orchestration superquery (SURVEY §3.2): determine project states,
   * advance completed ones through QC → react, and fill capacity with new
   * candidates. Iteration is driver-side over the dimension-sized status
-  * table (mirroring the reference); all per-project data work — QC rollup,
-  * results load — is a distributed job.
+  * table (mirroring the reference): its reads and every transition run on
+  * the driver ([[StateMachine]]) and start no Spark job. All per-project
+  * data work — QC rollup, results load — and the candidate search
+  * (`Selection.findTodo`, which anti-joins the status table) are
+  * distributed jobs.
   */
 object Management {
 
@@ -49,11 +52,9 @@ object Management {
   /** determine_projects (management.py:17-39): non-terminal projects
     * partitioned by workspace probes.
     */
-  def determineProjects(spark: SparkSession, deps: Deps): Partition = {
-    val nonTerminal = Selection.nonTerminal(
-      deps.wh.readOrEmpty("status", Schemas.status))
-      .collect().map(_.getString(0)).toSeq.sorted
-    val (done, rest) = nonTerminal.partition(deps.ws.isDone)
+  def determineProjects(deps: Deps): Partition = {
+    val (done, rest) =
+      StateMachine.nonTerminal(deps.wh).partition(deps.ws.isDone)
     val (running, notDone) = rest.partition(deps.ws.isRunning)
     Partition(done, running, notDone)
   }
@@ -68,14 +69,14 @@ object Management {
     val errors = Option(d.getAs[String]("errors")).filter(_.nonEmpty)
     if (d.getAs[Boolean]("discard")) {
       // Discard (projects.py:408-415)
-      StateMachine.setStatus(spark, deps.wh, project, "failed",
+      StateMachine.setStatus(deps.wh, project, "failed",
         note1 = errors, paired = Some(paired))
       deps.ws.delete(project)
       "discard"
     } else if (d.getAs[Boolean]("re_run")) {
       // Rerun_as_single_end (projects.py:314-329)
       deps.ws.prepareRerun(project)
-      StateMachine.setStatus(spark, deps.wh, project, "to_re_run",
+      StateMachine.setStatus(deps.wh, project, "to_re_run",
         note1 = errors, paired = Some(paired), rerunAsSingleEnd = Some(true))
       deps.launcher.launch(project, rerunAsSingleEnd = true)
       "re_run"
@@ -87,27 +88,27 @@ object Management {
       deps.wh.append("asv_counts", counts)
       deps.wh.append("asv_sequences", seqs, partitionCols = Seq("project"))
       deps.wh.append("asv_assignments", assignments)
-      StateMachine.setStatus(spark, deps.wh, project, "complete",
+      StateMachine.setStatus(deps.wh, project, "complete",
         note1 = errors, paired = Some(paired))
       deps.ws.archive(project)
-      StateMachine.setStatus(spark, deps.wh, project, "archived")
+      StateMachine.setStatus(deps.wh, project, "archived")
       deps.ws.delete(project)
-      StateMachine.setStatus(spark, deps.wh, project, "done")
+      StateMachine.setStatus(deps.wh, project, "done")
       "save"
     }
   }
 
   /** initialize_pipeline + RUN (projects.py:108-135). */
   def initializeAndRun(spark: SparkSession, deps: Deps, project: String): Unit = {
-    StateMachine.initialize(spark, deps.wh, project)
+    StateMachine.initialize(deps.wh, project)
     deps.launcher.initialize(project)
     val srrs = Selection.accessionList(
       deps.wh.readOrEmpty("samples", Schemas.samples), project)
       .collect().map(_.getString(0)).toSeq
     deps.ws.writeAccessionList(project, srrs)
-    StateMachine.setStatus(spark, deps.wh, project, "accession_list_created")
+    StateMachine.setStatus(deps.wh, project, "accession_list_created")
     deps.launcher.launch(project, rerunAsSingleEnd = false)
-    StateMachine.setStatus(spark, deps.wh, project, "running")
+    StateMachine.setStatus(deps.wh, project, "running")
   }
 
   /** autoforward (main.py:113-134): advance everything done, then fill
@@ -115,7 +116,7 @@ object Management {
     * admission band (capped at 1000 samples, main.py:126).
     */
   def autoforward(spark: SparkSession, deps: Deps): Map[String, Seq[String]] = {
-    val part = determineProjects(spark, deps)
+    val part = determineProjects(deps)
     val advanced = part.done.map(p => p -> advanceProject(spark, deps, p))
     val toStart = deps.cfg.maxProjects -
       (part.running.length + part.notDone.length)

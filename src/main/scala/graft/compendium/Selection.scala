@@ -39,10 +39,6 @@ object Selection {
       .limit(needed)
       .select("project", "samples")
 
-  /** P3 (management.py:17-20): projects without a terminal status. */
-  def nonTerminal(status: DataFrame): DataFrame =
-    status.filter(!col("status").isin("done", "failed")).select("project")
-
   /** P1+O1 (db.py:278-283): unresolved samples needing run accessions —
     * deterministic-hash sample of n.
     */

@@ -8,10 +8,12 @@ import org.apache.spark.sql.functions._
   * partitioned to match access patterns.
   *
   * Upserts are join-coalesce-rewrite: plain Spark has no in-place MERGE, so
-  * K2/K3 (db.py:440-470; projects.py:87-106) are expressed as a left join of
-  * the base table with the delta, per-column `coalesce(new, old)`, written to
-  * a temp path and atomically swapped — preserving the CLI idempotence the
-  * reference gets from SQLite transactions (db.py:46).
+  * K2 (db.py:440-470) is expressed as a left join of the base table with
+  * the delta, per-column `coalesce(new, old)`, written to a temp path and
+  * atomically swapped — preserving the CLI idempotence the reference gets
+  * from SQLite transactions (db.py:46). K3, the project status table
+  * (projects.py:87-106), does the same merge on the driver
+  * ([[StateMachine]], [[replaceTiny]]).
   *
   * Scale notes: results tables are written partitioned by `project`
   * (SURVEY.md §4) so per-project reads (projects.py:67, 502) prune to one
@@ -363,10 +365,11 @@ final class Warehouse(spark: SparkSession, root: String) {
   }
 
   /** [[replace]] for a TINY driver-held row set (the replay-marker
-    * sidecars: one row per stream lineage): identical rename-swap commit
-    * and on-disk parquet format, but the staging write is a direct
-    * driver-side file create ([[graft.core.TinyParquet]]) instead of a
-    * Spark write job — one job per epoch removed from every IVM replay
+    * sidecars: one row per stream lineage; the project status table: one
+    * row per project): identical rename-swap commit and on-disk parquet
+    * format, but the staging write is a direct driver-side file create
+    * ([[graft.core.TinyParquet]]) instead of a Spark write job — one job
+    * per epoch removed from every IVM replay, and per status transition
     * (optimization guide §1.2: the job moved no data).
     */
   private[graft] def replaceTiny(table: String,

@@ -2,11 +2,14 @@ package graft.core
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroup
+import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetReader}
+import org.apache.parquet.io.InputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation.stringType
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.parquet.schema.{MessageType, Types}
@@ -27,14 +30,21 @@ import org.apache.parquet.schema.{MessageType, Types}
   * data).
   *
   * Scale stance: ONLY for row sets the DRIVER already holds and that are
-  * bounded by construction (lineage maps). Anything data-sized keeps the
-  * distributed write path.
+  * bounded by construction: the lineage maps, and the compendium's
+  * project `status` table ([[graft.compendium.StateMachine]]) — O(projects),
+  * held whole on the driver, and already rewritten whole on every
+  * transition. Anything data-sized keeps the distributed write path.
   */
 object TinyParquet {
 
   sealed trait ColType
   case object LongCol extends ColType
   case object StringCol extends ColType
+  /** Nullable (OPTIONAL) columns, as Spark writes every column: a null
+    * value writes no field and reads back absent from the row's map.
+    */
+  case object OptStringCol extends ColType
+  case object OptBoolCol extends ColType
 
   private def schemaOf(cols: Seq[(String, ColType)]): MessageType = {
     val b = Types.buildMessage()
@@ -44,6 +54,11 @@ object TinyParquet {
       case (n, StringCol) =>
         b.addField(Types.required(PrimitiveTypeName.BINARY)
           .as(stringType()).named(n))
+      case (n, OptStringCol) =>
+        b.addField(Types.optional(PrimitiveTypeName.BINARY)
+          .as(stringType()).named(n))
+      case (n, OptBoolCol) =>
+        b.addField(Types.optional(PrimitiveTypeName.BOOLEAN).named(n))
     }
     b.named("spark_schema")
   }
@@ -70,17 +85,31 @@ object TinyParquet {
       cols.zip(r).foreach {
         case ((n, LongCol), v)   => g.add(n, v.asInstanceOf[Long])
         case ((n, StringCol), v) => g.add(n, v.asInstanceOf[String])
+        case (_, null)              => ()
+        case ((n, OptStringCol), v) => g.add(n, v.asInstanceOf[String])
+        case ((n, OptBoolCol), v)   => g.add(n, v.asInstanceOf[Boolean])
       }
       writer.write(g)
     } finally writer.close()
   }
 
+  /** A Group reader over `file`'s own conf. `ParquetReader.builder(…,
+    * path)` starts from a fresh `new Configuration()` and reads options
+    * from it before `withConf` can replace it, so every file read
+    * re-parsed Hadoop's default XML resources out of the jar.
+    */
+  private final class GroupReader(file: InputFile)
+      extends ParquetReader.Builder[Group](file) {
+    override protected def getReadSupport(): ReadSupport[Group] =
+      new GroupReadSupport()
+  }
+
   /** Every row of every data file under `dir` as name→value maps (Long
-    * for INT64/INT32, String for BINARY; a missing optional field is
-    * absent from the map). Reads any standard parquet layout, so legacy
-    * Spark-written sidecars (optional fields, _SUCCESS markers, crc
-    * files, multiple parts) come back exactly as `collect()` would give
-    * them. Empty/absent directory → no rows.
+    * for INT64/INT32, String for BINARY, Boolean for BOOLEAN; a missing
+    * optional field is absent from the map). Reads any standard parquet
+    * layout, so legacy Spark-written sidecars (optional fields, _SUCCESS
+    * markers, crc files, multiple parts) come back exactly as `collect()`
+    * would give them. Empty/absent directory → no rows.
     */
   def readRows(conf: Configuration, dir: Path): Seq[Map[String, Any]] = {
     val fs = dir.getFileSystem(conf)
@@ -89,9 +118,8 @@ object TinyParquet {
       .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
         !f.getPath.getName.startsWith("."))
     files.flatMap { f =>
-      val reader = ParquetReader
-        .builder(new GroupReadSupport(), f.getPath)
-        .withConf(conf).build()
+      val reader =
+        new GroupReader(HadoopInputFile.fromPath(f.getPath, conf)).build()
       try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
         val mt = g.getType
         (0 until mt.getFieldCount).flatMap { i =>
@@ -100,10 +128,11 @@ object TinyParquet {
           else {
             val v: Option[Any] =
               fld.asPrimitiveType().getPrimitiveTypeName match {
-                case PrimitiveTypeName.INT64  => Some(g.getLong(i, 0))
-                case PrimitiveTypeName.INT32  => Some(g.getInteger(i, 0).toLong)
-                case PrimitiveTypeName.BINARY => Some(g.getString(i, 0))
-                case _                        => None
+                case PrimitiveTypeName.INT64   => Some(g.getLong(i, 0))
+                case PrimitiveTypeName.INT32   => Some(g.getInteger(i, 0).toLong)
+                case PrimitiveTypeName.BINARY  => Some(g.getString(i, 0))
+                case PrimitiveTypeName.BOOLEAN => Some(g.getBoolean(i, 0))
+                case _                         => None
               }
             v.map(fld.getName -> _)
           }

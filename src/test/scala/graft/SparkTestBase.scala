@@ -4,14 +4,19 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSpark {
-  // the mains' local-filesystem policy, so specs run the FS the bench runs
-  lazy val spark: SparkSession = graft.core.LocalFs(SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false"))
-    .getOrCreate()
+  // the mains' local-filesystem policy and log level, so specs run the
+  // FS the bench runs and the suite's output is WARN and above
+  lazy val spark: SparkSession = {
+    val s = graft.core.LocalFs(SparkSession.builder()
+      .master("local[4]")
+      .appName("graft-test")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false"))
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 }
 
 abstract class SparkTestBase extends AnyFunSuite {

@@ -50,9 +50,9 @@ class ManagementSpec extends SparkTestBase {
     val p = "PRJ_SAVE"
     writeSummary(s"$projRoot/$p", (1 to 4).map(i => goodRow(s"SRR00$i")))
     copyResults(s"$projRoot/$p")
-    StateMachine.initialize(spark, deps.wh, p)
-    StateMachine.setStatus(spark, deps.wh, p, "accession_list_created")
-    StateMachine.setStatus(spark, deps.wh, p, "running")
+    StateMachine.initialize(deps.wh, p)
+    StateMachine.setStatus(deps.wh, p, "accession_list_created")
+    StateMachine.setStatus(deps.wh, p, "running")
 
     assert(Management.advanceProject(spark, deps, p) === "save")
     val st = deps.wh.read("status").collect().head
@@ -71,9 +71,9 @@ class ManagementSpec extends SparkTestBase {
     writeSummary(s"$projRoot/$p",
       Seq(goodRow("SRR001")) ++ (2 to 4).map(i => badRetainedRow(s"SRR00$i")))
     copyResults(s"$projRoot/$p")
-    StateMachine.initialize(spark, deps.wh, p)
-    StateMachine.setStatus(spark, deps.wh, p, "accession_list_created")
-    StateMachine.setStatus(spark, deps.wh, p, "running")
+    StateMachine.initialize(deps.wh, p)
+    StateMachine.setStatus(deps.wh, p, "accession_list_created")
+    StateMachine.setStatus(deps.wh, p, "running")
 
     assert(Management.advanceProject(spark, deps, p) === "discard")
     val st = deps.wh.read("status").collect().head
@@ -91,9 +91,9 @@ class ManagementSpec extends SparkTestBase {
         (3 to 4).map(i => badMergedRow(s"SRR00$i")))
     copyResults(s"$projRoot/$p")
     Files.writeString(Paths.get(s"$projRoot/$p/SRR001_2.fastq"), "x")
-    StateMachine.initialize(spark, deps.wh, p)
-    StateMachine.setStatus(spark, deps.wh, p, "accession_list_created")
-    StateMachine.setStatus(spark, deps.wh, p, "running")
+    StateMachine.initialize(deps.wh, p)
+    StateMachine.setStatus(deps.wh, p, "accession_list_created")
+    StateMachine.setStatus(deps.wh, p, "running")
 
     assert(Management.advanceProject(spark, deps, p) === "re_run")
     val st = deps.wh.read("status").collect().head
@@ -114,9 +114,9 @@ class ManagementSpec extends SparkTestBase {
       (1 to 2).map(i => goodRow(s"SRR00$i")) ++
         (3 to 4).map(i => badMergedRow(s"SRR00$i")))
     copyResults(s"$projRoot/$p")
-    StateMachine.initialize(spark, deps.wh, p)
-    StateMachine.setStatus(spark, deps.wh, p, "accession_list_created")
-    StateMachine.setStatus(spark, deps.wh, p, "running")
+    StateMachine.initialize(deps.wh, p)
+    StateMachine.setStatus(deps.wh, p, "accession_list_created")
+    StateMachine.setStatus(deps.wh, p, "running")
 
     assert(Management.autoforward(spark, deps)("advanced_re_run") === Seq(p))
     // the relaunched single-end pass is in flight

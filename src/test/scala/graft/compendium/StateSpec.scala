@@ -1,6 +1,7 @@
 package graft.compendium
 
 import graft.SparkTestBase
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 class StateMachineSpec extends SparkTestBase {
@@ -8,10 +9,10 @@ class StateMachineSpec extends SparkTestBase {
 
   test("lifecycle transitions persist through the status upsert") {
     val wh = new Warehouse(spark, tmpDir())
-    StateMachine.initialize(spark, wh, "PRJNA1")
-    StateMachine.setStatus(spark, wh, "PRJNA1", "accession_list_created")
-    StateMachine.setStatus(spark, wh, "PRJNA1", "running")
-    StateMachine.setStatus(spark, wh, "PRJNA1", "to_re_run",
+    StateMachine.initialize(wh, "PRJNA1")
+    StateMachine.setStatus(wh, "PRJNA1", "accession_list_created")
+    StateMachine.setStatus(wh, "PRJNA1", "running")
+    StateMachine.setStatus(wh, "PRJNA1", "to_re_run",
       rerunAsSingleEnd = Some(true))
     val row = wh.read("status").collect().head
     assert(row.getAs[String]("status") === "to_re_run")
@@ -20,22 +21,158 @@ class StateMachineSpec extends SparkTestBase {
 
   test("illegal transitions are rejected") {
     val wh = new Warehouse(spark, tmpDir())
-    StateMachine.initialize(spark, wh, "PRJNA2")
+    StateMachine.initialize(wh, "PRJNA2")
     intercept[IllegalArgumentException] {
-      StateMachine.setStatus(spark, wh, "PRJNA2", "done")
+      StateMachine.setStatus(wh, "PRJNA2", "done")
     }
   }
 
   test("re-initializing a tracked project is refused (projects.py:113-119)") {
     val wh = new Warehouse(spark, tmpDir())
-    StateMachine.initialize(spark, wh, "PRJNA3")
-    StateMachine.setStatus(spark, wh, "PRJNA3", "accession_list_created")
+    StateMachine.initialize(wh, "PRJNA3")
+    StateMachine.setStatus(wh, "PRJNA3", "accession_list_created")
     intercept[IllegalArgumentException] {
-      StateMachine.initialize(spark, wh, "PRJNA3")
+      StateMachine.initialize(wh, "PRJNA3")
     }
     // state untouched by the refused re-init
     val row = wh.read("status").collect().head
     assert(row.getAs[String]("status") === "accession_list_created")
+  }
+
+  /** The number of Spark jobs `body` starts: a listener counts job starts
+    * until a marker job run after `body` has started (a listener sees
+    * events in order).
+    */
+  private def jobsIn(body: => Unit): Int = {
+    import org.apache.spark.scheduler._
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.job.description") == "drain marker"))
+          drained.countDown()
+        else jobs.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setJobDescription("drain marker")
+      spark.range(1).count()
+      spark.sparkContext.setJobDescription(null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get
+  }
+
+  /** Every file under the warehouse root: (path, length, mtime). */
+  private def files(root: String): Seq[(String, Long, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(root)
+    val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listFiles(p, true)
+    val b = Seq.newBuilder[(String, Long, Long)]
+    while (it.hasNext) {
+      val f = it.next()
+      b += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    b.result().sortBy(_._1)
+  }
+
+  private def statusRows(wh: Warehouse) =
+    wh.readOrEmpty("status", Schemas.status).collect()
+      .map(r => (0 until r.length).map(r.get)).sortBy(_.head.toString).toSeq
+
+  test("transitions run on the driver: initialize + three setStatus start no Spark job") {
+    val wh = new Warehouse(spark, tmpDir())
+    StateMachine.initialize(wh, "PRJ_OTHER")
+    val n = jobsIn {
+      StateMachine.initialize(wh, "PRJNA4")
+      StateMachine.setStatus(wh, "PRJNA4", "accession_list_created")
+      StateMachine.setStatus(wh, "PRJNA4", "running")
+      StateMachine.setStatus(wh, "PRJNA4", "to_re_run",
+        note1 = Some("16% merged"), paired = Some(true),
+        rerunAsSingleEnd = Some(true))
+    }
+    assert(n === 0)
+    assert(StateMachine.nonTerminal(wh) === Seq("PRJNA4", "PRJ_OTHER"))
+  }
+
+  test("a status table the Spark path wrote transitions and keeps its other row") {
+    val root = tmpDir()
+    val wh = new Warehouse(spark, root)
+    // the old write path's output: a Spark write through the rename-swap,
+    // nullable columns with nulls in them, one part file per row
+    wh.replace("status", spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq(Row("P_A", "running", false, null, null, null),
+        Row("P_B", "to_re_run", true, true, "16% merged", "n2")), 2),
+      Schemas.status))
+    assert(files(root).count(_._1.contains("/part-")) === 2)
+    StateMachine.setStatus(wh, "P_A", "complete", paired = Some(false))
+    StateMachine.setStatus(wh, "P_B", "running")
+    intercept[IllegalArgumentException] {
+      StateMachine.setStatus(wh, "P_A", "running")
+    }
+    assert(statusRows(wh) === Seq(
+      Seq("P_A", "complete", false, false, null, null),
+      Seq("P_B", "running", true, true, "16% merged", "n2")))
+  }
+
+  test("readOrEmpty reads the driver-written status table back with the same rows") {
+    val wh = new Warehouse(spark, tmpDir())
+    StateMachine.initialize(wh, "P1")
+    StateMachine.initialize(wh, "P2")
+    StateMachine.setStatus(wh, "P2", "accession_list_created")
+    StateMachine.setStatus(wh, "P2", "running")
+    StateMachine.setStatus(wh, "P2", "failed",
+      note1 = Some(""), paired = Some(false))
+    // a setStatus on an untracked project inserts it, nulls and all
+    StateMachine.setStatus(wh, "P3", "running")
+    val df = wh.readOrEmpty("status", Schemas.status)
+    assert(df.columns.toSeq === Schemas.status.fieldNames.toSeq)
+    assert(statusRows(wh) === Seq(
+      Seq("P1", "initialized", false, null, null, null),
+      Seq("P2", "failed", false, false, "", null),
+      Seq("P3", "running", null, null, null, null)))
+    assert(wh.read("status").schema.map(f => f.name -> f.dataType) ===
+      Schemas.status.map(f => f.name -> f.dataType))
+    assert(StateMachine.nonTerminal(wh) === Seq("P1", "P3"))
+  }
+
+  test("a status__tmp left by a crash before the flip does not break the next transition") {
+    val root = tmpDir()
+    val wh = new Warehouse(spark, root)
+    StateMachine.initialize(wh, "P1")
+    // a staging dir the crashed writer half-filled: a torn part file
+    val tmp = java.nio.file.Paths.get(root, "status__tmp")
+    java.nio.file.Files.createDirectories(tmp)
+    java.nio.file.Files.write(tmp.resolve("part-00000-torn.parquet"),
+      "PAR1 torn".getBytes("UTF-8"))
+    StateMachine.setStatus(wh, "P1", "accession_list_created")
+    assert(!java.nio.file.Files.exists(tmp))
+    assert(statusRows(wh) ===
+      Seq(Seq("P1", "accession_list_created", false, null, null, null)))
+  }
+
+  test("a refused transition leaves the status table's files unchanged") {
+    val root = tmpDir()
+    val wh = new Warehouse(spark, root)
+    StateMachine.initialize(wh, "P1")
+    StateMachine.initialize(wh, "P2")
+    StateMachine.setStatus(wh, "P2", "failed")
+    val before = files(root)
+    intercept[IllegalArgumentException] {
+      StateMachine.setStatus(wh, "P1", "done")
+    }
+    intercept[IllegalArgumentException] {
+      StateMachine.setStatus(wh, "P2", "running")
+    }
+    intercept[IllegalArgumentException] {
+      StateMachine.setStatus(wh, "P1", "no_such_status")
+    }
+    intercept[IllegalArgumentException] {
+      StateMachine.initialize(wh, "P2")
+    }
+    assert(files(root) === before)
   }
 
   test("react maps QC decisions to transitions (projects.py:554-571)") {
