@@ -1,5 +1,6 @@
 package graft.compendium
 
+import graft.core.Jobs.described
 import org.apache.spark.sql.SparkSession
 
 /** CLI dispatcher mirroring the reference's main.py command surface
@@ -37,7 +38,13 @@ object Cli {
       new Warehouse(spark, whRoot),
       new LocalWorkspace(sys.env.getOrElse("GRAFT_PROJECTS", "projects")),
       new LoggingLauncher))
+    // every job of a command carries its name (`cli: autoforward`); the
+    // phases inside it label their own jobs
+    described(spark, s"cli: ${args(0)}")(command(spark, args, d, eutils))
+  }
 
+  private def command(spark: SparkSession, args: Array[String],
+      d: Management.Deps, eutils: Option[EUtilsClient]): Unit =
     args(0) match {
       case "xml" =>
         require(args.length >= 3, "xml requires <taxon> <file>")
@@ -93,5 +100,4 @@ object Cli {
       case other =>
         println(s"Unknown command: $other")
     }
-  }
 }

@@ -1,7 +1,7 @@
 package graft.compendium
 
+import graft.core.Jobs.described
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** S9/K6 side-effect boundaries (SURVEY §7.1): the engine stays pure;
   * filesystem probes, archive/delete, and the external pipeline launch
@@ -35,16 +35,20 @@ trait PipelineLauncher {
 /** The orchestration superquery (SURVEY §3.2): determine project states,
   * advance completed ones through QC → react, and fill capacity with new
   * candidates. Iteration is driver-side over the dimension-sized status
-  * table (mirroring the reference): its reads and every transition run on
-  * the driver ([[StateMachine]]) and start no Spark job. All per-project
-  * data work — QC rollup, results load — and the candidate search
-  * (`Selection.findTodo`, which anti-joins the status table) are
-  * distributed jobs.
+  * table (mirroring the reference): it is read once per [[autoforward]],
+  * and it and every transition run on the driver ([[StateMachine]]) and
+  * start no Spark job. The per-project data work — QC rollup, results
+  * load, accession list — and the candidate search over the samples
+  * (`Selection.findTodo`, which excludes the tracked projects read with
+  * the statuses) are Spark jobs, each labelled with its phase (`af: qc
+  * <project>`, `af: load <project>`, `af: accessions <project>`,
+  * `af: todo`).
   */
 object Management {
 
+  /** The non-terminal projects by probe, and every tracked project. */
   final case class Partition(done: Seq[String], running: Seq[String],
-      notDone: Seq[String])
+      notDone: Seq[String], tracked: Seq[String])
 
   final case class Deps(wh: Warehouse, ws: ProjectWorkspace,
       launcher: PipelineLauncher, cfg: EngineConfig = EngineConfig.default)
@@ -53,18 +57,21 @@ object Management {
     * partitioned by workspace probes.
     */
   def determineProjects(deps: Deps): Partition = {
+    val statuses = StateMachine.statuses(deps.wh)
     val (done, rest) =
-      StateMachine.nonTerminal(deps.wh).partition(deps.ws.isDone)
+      StateMachine.nonTerminal(statuses).partition(deps.ws.isDone)
     val (running, notDone) = rest.partition(deps.ws.isRunning)
-    Partition(done, running, notDone)
+    Partition(done, running, notDone, statuses.map(_._1))
   }
 
   /** Advance one completed project: QC evaluate → REACT
     * (projects.py:554-571). Returns the action taken.
     */
   def advanceProject(spark: SparkSession, deps: Deps, project: String): String = {
-    val d = SummaryQC.evaluate(spark, deps.ws.summaryPath(project), project,
-      deps.cfg.thresholds).collect().head
+    val d = described(spark, s"af: qc $project") {
+      SummaryQC.evaluate(spark, deps.ws.summaryPath(project), project,
+        deps.cfg.thresholds).collect().head
+    }
     val paired = d.getAs[Boolean]("paired")
     val errors = Option(d.getAs[String]("errors")).filter(_.nonEmpty)
     if (d.getAs[Boolean]("discard")) {
@@ -83,11 +90,13 @@ object Management {
     } else {
       // Save_results (projects.py:481-552): load → complete → archive →
       // archived → delete → done
-      val (counts, seqs, assignments) =
-        ResultsLoad.load(spark, deps.ws.projectDir(project), project, deps.cfg)
-      deps.wh.append("asv_counts", counts)
-      deps.wh.append("asv_sequences", seqs, partitionCols = Seq("project"))
-      deps.wh.append("asv_assignments", assignments)
+      described(spark, s"af: load $project") {
+        val (counts, seqs, assignments) =
+          ResultsLoad.load(spark, deps.ws.projectDir(project), project, deps.cfg)
+        deps.wh.append("asv_counts", counts)
+        deps.wh.append("asv_sequences", seqs, partitionCols = Seq("project"))
+        deps.wh.append("asv_assignments", assignments)
+      }
       StateMachine.setStatus(deps.wh, project, "complete",
         note1 = errors, paired = Some(paired))
       deps.ws.archive(project)
@@ -102,9 +111,10 @@ object Management {
   def initializeAndRun(spark: SparkSession, deps: Deps, project: String): Unit = {
     StateMachine.initialize(deps.wh, project)
     deps.launcher.initialize(project)
-    val srrs = Selection.accessionList(
-      deps.wh.readOrEmpty("samples", Schemas.samples), project)
-      .collect().map(_.getString(0)).toSeq
+    val srrs = described(spark, s"af: accessions $project") {
+      Selection.accessionList(
+        deps.wh.readOrEmpty("samples", Schemas.samples), project)
+    }
     deps.ws.writeAccessionList(project, srrs)
     StateMachine.setStatus(deps.wh, project, "accession_list_created")
     deps.launcher.launch(project, rerunAsSingleEnd = false)
@@ -122,13 +132,15 @@ object Management {
       (part.running.length + part.notDone.length)
     val todo =
       if (toStart <= 0) Seq.empty[String]
-      else Selection.findTodo(
-        deps.wh.readOrEmpty("samples", Schemas.samples),
-        deps.wh.readOrEmpty("status", Schemas.status),
-        needed = toStart,
-        minSamples = deps.cfg.minProjectSamples,
-        maxSamples = 1000L)
-        .collect().map(_.getString(0)).toSeq
+      else described(spark, "af: todo") {
+        Selection.findTodo(
+          deps.wh.readOrEmpty("samples", Schemas.samples),
+          part.tracked,
+          needed = toStart,
+          minSamples = deps.cfg.minProjectSamples,
+          maxSamples = 1000L)
+          .collect().map(_.getString(0)).toSeq
+      }
     todo.foreach(p => initializeAndRun(spark, deps, p))
     Map(
       "advanced_save" -> advanced.collect { case (p, "save") => p },

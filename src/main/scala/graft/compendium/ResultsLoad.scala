@@ -29,7 +29,7 @@ object ResultsLoad {
     * count) triplets, zeros dropped.
     */
   def readCountsMatrix(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read.option("sep", "\t").option("header", "true").csv(path)
+    val raw = Tsv.read(spark, path)
     val asvCol = raw.columns.head // blank header cell → ASV label column
     val sampleCols = raw.columns.tail
     raw.withColumnRenamed(asvCol, "asv")
@@ -62,10 +62,10 @@ object ResultsLoad {
     * (db.py:167-178 uses the same workaround).
     */
   def readTaxonomy(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read.option("sep", "\t").option("header", "true").csv(path)
+    val raw = Tsv.read(spark, path)
     val ranks = Seq("kingdom", "phylum", "tclass", "torder", "family", "genus")
     val keep = raw.columns.take(1 + ranks.length)
-    raw.select(keep.map(col): _*)
+    raw.select(keep.map(col).toSeq: _*)
       .toDF(("asv" +: ranks.take(keep.length - 1)): _*)
   }
 

@@ -2,6 +2,7 @@ package graft.compendium
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Project selection & reporting queries over the warehouse tables
   * (SURVEY.md §2 A1-A4, P1-P3, J2/J6, O1-O3).
@@ -23,17 +24,21 @@ object Selection {
     *
     * Divergence (documented, SURVEY §7.3): the reference's exclusion compares
     * a tuple against a string list and never excludes (management.py:125);
-    * we implement the evident intent as a left-anti join against `status`.
-    * `ORDER BY RANDOM()` becomes a deterministic Knuth-hash order so runs
-    * are reproducible (and testable) on any cluster.
+    * we implement the evident intent. `tracked` is every project of the
+    * `status` table, which the caller has already read on the driver
+    * ([[StateMachine.statuses]]), so the exclusion is a literal list in the
+    * filter instead of a join against the table: a null project is kept,
+    * as the anti-join it replaces kept it. `ORDER BY RANDOM()` becomes a
+    * deterministic Knuth-hash order so runs are reproducible (and testable)
+    * on any cluster.
     */
-  def findTodo(samples: DataFrame, status: DataFrame, needed: Int,
+  def findTodo(samples: DataFrame, tracked: Seq[String], needed: Int,
       minSamples: Long = 50, maxSamples: Long = 10000): DataFrame =
     processableSamples(samples)
       .groupBy("project")
       .agg(count(col("srr")).as("samples"))
       .filter(col("samples") >= minSamples && col("samples") <= maxSamples)
-      .join(status.select("project"), Seq("project"), "left_anti")
+      .filter(col("project").isNull || !col("project").isin(tracked: _*))
       .withColumn("h", abs(xxhash64(col("project"))))
       .orderBy("h", "project")
       .limit(needed)
@@ -64,12 +69,21 @@ object Selection {
       .select("project")
 
   /** K4 (projects.py:56-85): accession list for one project — the srr
-    * column of its processable samples, sorted for determinism.
+    * column of its processable samples, sorted for determinism. A
+    * project's list is driver-sized, so it is collected and sorted on the
+    * driver in the order Spark sorts strings (UTF-8 bytes, unsigned), not
+    * by a distributed sort's sampling and exchange jobs.
     */
-  def accessionList(samples: DataFrame, project: String): DataFrame =
+  def accessionList(samples: DataFrame, project: String): Seq[String] =
     processableSamples(samples)
       .filter(col("project") === project)
-      .select("srr").orderBy("srr")
+      .select("srr").collect().map(_.getString(0)).toSeq
+      .sorted(utf8Order)
+
+  /** Spark's string order: UTF-8 bytes compared unsigned. */
+  private val utf8Order: Ordering[String] = Ordering.fromLessThan { (a, b) =>
+    UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b)) < 0
+  }
 
   /** A2 (management.py:133-149, intent — the reference SQL names columns
     * that don't exist): compendium summary of distinct projects/samples.

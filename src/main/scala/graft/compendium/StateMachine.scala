@@ -18,8 +18,7 @@ import org.apache.spark.sql.types.{BooleanType, StringType}
   * merges the one row, and rewrites the table with
   * [[Warehouse.replaceTiny]]'s rename-swap — no Spark job. The files are
   * the parquet layout Spark reads (`Warehouse.readOrEmpty`, the
-  * `findTodo` anti-join, the reports), and a table Spark wrote reads back
-  * here.
+  * reports), and a table Spark wrote reads back here.
   */
 object StateMachine {
 
@@ -77,13 +76,21 @@ object StateMachine {
   private def isProject(project: String)(r: Map[String, Any]): Boolean =
     r.get("project").contains(project)
 
+  /** Every tracked project with its status (null where it has none), one
+    * pair per status row, read on the driver.
+    */
+  def statuses(wh: Warehouse): Seq[(String, String)] =
+    readStatus(wh).map(r =>
+      r("project").toString -> r.get("status").map(_.toString).orNull)
+
   /** P3 (management.py:17-20): the tracked projects without a terminal
     * status, sorted.
     */
-  def nonTerminal(wh: Warehouse): Seq[String] =
-    readStatus(wh)
-      .filter(_.get("status").exists(s => !terminal(s.toString)))
-      .map(_("project").toString).sorted
+  def nonTerminal(wh: Warehouse): Seq[String] = nonTerminal(statuses(wh))
+
+  /** [[nonTerminal]] over status rows already read. */
+  def nonTerminal(statuses: Seq[(String, String)]): Seq[String] =
+    statuses.collect { case (p, s) if s != null && !terminal(s) => p }.sorted
 
   /** Initialize tracking for a project (projects.py:108-113). Mirrors the
     * reference's INSERT-conflict guard (projects.py:113-119): re-initializing

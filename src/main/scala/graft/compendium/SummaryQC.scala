@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   *
   * Everything is plain column expressions — no UDFs — so the whole pipeline
   * stays inside WholeStageCodegen, and the rollup is a single groupBy with
-  * map-side partial aggregation (one shuffle per evaluation regardless of
-  * sample count).
+  * map-side partial aggregation. [[evaluate]] reads the header on the
+  * driver ([[Tsv]]) and rolls up on one partition, so one evaluation is
+  * one Spark job with no shuffle.
   *
   * Documented divergences from the reference:
   *  - `retained_percent` division is guarded (reference raises on dinput=0,
@@ -31,9 +32,7 @@ object SummaryQC {
     * decides paired-ness (projects.py:588).
     */
   def readSummaryTsv(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read
-      .option("sep", "\t").option("header", "true")
-      .csv(path)
+    val raw = Tsv.read(spark, path)
     val renamed = raw.withColumnRenamed(raw.columns.head, "srr")
     val counts = renamed.columns.filter(_ != "srr")
     counts.foldLeft(
@@ -144,11 +143,14 @@ object SummaryQC {
 
   /** Full evaluation of one project directory's summary.tsv → a single
     * decision row (the `Load_results_summary` + `_evaluate_flags` flow,
-    * projects.py:203-231).
+    * projects.py:203-231). One project's summary is driver-sized (the
+    * admission band caps a project at 1,000 samples), so the samples sit
+    * on one partition: the rollup's grouping is then already satisfied
+    * and it plans no exchange.
     */
   def evaluate(spark: SparkSession, summaryPath: String, project: String,
       th: QcThresholds = QcThresholds()): DataFrame = {
-    val samples = sampleQc(readSummaryTsv(spark, summaryPath), th)
+    val samples = sampleQc(readSummaryTsv(spark, summaryPath).coalesce(1), th)
       .withColumn("project", lit(project))
     decide(projectRollup(samples), th)
   }

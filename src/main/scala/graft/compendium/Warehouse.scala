@@ -50,7 +50,8 @@ final class Warehouse(spark: SparkSession, root: String) {
     * steady-state reads infer nothing. Correctness: the memo is updated
     * at every mutation of the table, and a fresh Warehouse instance
     * (every gate run) starts empty — the first read of a pre-existing
-    * table infers once. Metadata only; scans still read the files.
+    * table infers once, from all of its files. Metadata only; scans
+    * still read the files.
     */
   private val schemaMemo = new scala.collection.concurrent.TrieMap[
     String, org.apache.spark.sql.types.StructType]()
@@ -94,9 +95,13 @@ final class Warehouse(spark: SparkSession, root: String) {
     schemaMemo.put(table, merged): Unit
   }
 
+  /** A memo miss infers from EVERY file (`mergeSchema`): files written
+    * by appends of different widths disagree, and inference from one of
+    * them would drop the columns only the others carry.
+    */
   def read(table: String): DataFrame = {
     val sch = schemaMemo.getOrElseUpdate(table,
-      spark.read.parquet(path(table)).schema)
+      spark.read.option("mergeSchema", "true").parquet(path(table)).schema)
     spark.read.schema(sch).parquet(path(table))
   }
 
@@ -106,10 +111,15 @@ final class Warehouse(spark: SparkSession, root: String) {
     * warm; a per-epoch tax on the IVM appliers and a per-run tax on
     * every gate's final store read). Every caller declares exactly the
     * columns its own writer produced; parquet resolves them by name.
+    * An absent table is an empty `LocalRelation`, which the optimizer
+    * knows is empty: its anti-joins, outer joins and unions fold away
+    * at plan time, where an empty RDD is only found empty by running a
+    * stage for it.
     */
   def readOrEmpty(table: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
     if (exists(table)) spark.read.schema(schema).parquet(path(table))
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
 
   /** K1: append rows; `partitionBy` for the project-keyed results tables.
     * `dynamic` overwrite mode means re-loading a project replaces only that

@@ -249,10 +249,7 @@ object SketchAggregates {
     * registry (the [[VectorExpressions.register]] pattern — the analyzer
     * wraps the returned AggregateFunction in an AggregateExpression).
     */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kmv", buildKmv, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_topk", buildTopK, "built-in")
-  }
+  def register(spark: SparkSession): Unit =
+    VectorExpressions.registerMissing(spark,
+      ("graft_kmv", buildKmv), ("graft_topk", buildTopK))
 }

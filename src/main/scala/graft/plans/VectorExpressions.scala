@@ -398,21 +398,29 @@ object VectorExpressions {
     * registry so operators can call them via `call_function` (the public
     * Column-from-Expression path in Spark 4).
     */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", build, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rolling_hash", buildRolling, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_center", buildCenter, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pq_label", buildPqLabel, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pq_argmax", buildPqArgMax, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ncr_decode", buildNcr, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_md5_prefix60", buildMd5Prefix60, "built-in")
+  def register(spark: SparkSession): Unit =
+    registerMissing(spark,
+      ("graft_dot", build),
+      ("graft_rolling_hash", buildRolling),
+      ("graft_center", buildCenter),
+      ("graft_pq_label", buildPqLabel),
+      ("graft_pq_argmax", buildPqArgMax),
+      ("graft_ncr_decode", buildNcr),
+      ("graft_md5_prefix60", buildMd5Prefix60))
+
+  /** Registers each function the session's registry does not have yet —
+    * operators call `register` on every run, and a name the session
+    * already has (from an earlier run, or [[GraftExtensions]]) is left as
+    * it is instead of being replaced.
+    */
+  private[plans] def registerMissing(spark: SparkSession,
+      fns: (String, Seq[Expression] => Expression)*): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    fns.foreach { case (name, builder) =>
+      if (!registry.functionExists(
+          org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
   }
 
   private def buildMd5Prefix60(exprs: Seq[Expression]): Expression = {

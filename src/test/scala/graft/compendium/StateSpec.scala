@@ -212,8 +212,7 @@ class SelectionSpec extends SparkTestBase {
   ).toDF("srs", "project", "srr", "library_source", "library_strategy")
 
   test("findTodo: band filter + anti-join excludes tracked projects") {
-    val status = Seq(("PRJ_C", "running")).toDF("project", "status")
-    val todo = Selection.findTodo(samples, status,
+    val todo = Selection.findTodo(samples, Seq("PRJ_C"),
       needed = 5, minSamples = 2, maxSamples = 10).collect()
     assert(todo.map(_.getString(0)).toSet === Set("PRJ_A")) // C tracked, D too small
     assert(todo.head.getAs[Long]("samples") === 3L)
@@ -238,7 +237,6 @@ class SelectionSpec extends SparkTestBase {
 
   test("accession list matches the processable predicate") {
     val list = Selection.accessionList(samples, "PRJ_A")
-      .collect().map(_.getString(0))
     assert(list.toSeq === Seq("R1", "R2", "R3"))
   }
 
@@ -300,6 +298,26 @@ class WarehouseSchemaSpec extends SparkTestBase {
       Seq("project"))
     wh.append("part", Seq(("P2", 2L)).toDF("project", "k"), Seq("project"))
     val part = wh.read("part")
+    assert(part.columns.toSeq === Seq("k", "n", "project"))
+    assert(part.orderBy("k").as[(Long, Option[Long], String)].collect()
+      .toSeq === Seq((1L, Some(5L), "P1"), (2L, None, "P2")))
+  }
+
+  test("a fresh Warehouse reads a table written wide then narrow with every column") {
+    val root = tmpDir()
+    val wh = new Warehouse(spark, root)
+    wh.append("flat", Seq((1L, "a", 10.0)).toDF("k", "s", "x"))
+    wh.append("flat", Seq((2L, "b")).toDF("k", "s"))
+    wh.append("part", Seq(("P1", 1L, 5L)).toDF("project", "k", "n"),
+      Seq("project"))
+    wh.append("part", Seq(("P2", 2L)).toDF("project", "k"), Seq("project"))
+
+    val fresh = new Warehouse(spark, root)
+    val flat = fresh.read("flat")
+    assert(flat.columns.toSeq === Seq("k", "s", "x"))
+    assert(flat.orderBy("k").as[(Long, String, Option[Double])].collect()
+      .toSeq === Seq((1L, "a", Some(10.0)), (2L, "b", None)))
+    val part = fresh.read("part")
     assert(part.columns.toSeq === Seq("k", "n", "project"))
     assert(part.orderBy("k").as[(Long, Option[Long], String)].collect()
       .toSeq === Seq((1L, Some(5L), "P1"), (2L, None, "P2")))
