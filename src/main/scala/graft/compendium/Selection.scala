@@ -87,13 +87,30 @@ object Selection {
 
   /** A2 (management.py:133-149, intent — the reference SQL names columns
     * that don't exist): compendium summary of distinct projects/samples.
+    * The three exact distinct counts come from one aggregation over a
+    * union of (kind, value) pairs, nulls dropped as `countDistinct` drops
+    * them, and the one-row frame is built on the driver: two shuffle jobs
+    * and a collect, where two separate aggregations joined by a
+    * `crossJoin` planned four exchanges and a broadcast.
     */
-  def compendiumSummary(samples: DataFrame, asvCounts: DataFrame): DataFrame =
-    samples.agg(
-      countDistinct(col("project")).as("n_projects"),
-      countDistinct(col("srs")).as("n_samples"))
-      .crossJoin(asvCounts.agg(
-        countDistinct(col("sample")).as("n_samples_with_results")))
+  def compendiumSummary(samples: DataFrame, asvCounts: DataFrame): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val names = Seq("n_projects", "n_samples", "n_samples_with_results")
+    val counts = Seq(samples.select("project"), samples.select("srs"),
+        asvCounts.select("sample"))
+      .zipWithIndex
+      .map { case (values, kind) =>
+        values.toDF("v").withColumn("kind", lit(kind))
+      }
+      .reduce(_ union _)
+      .filter(col("v").isNotNull)
+      .groupBy("kind").agg(countDistinct(col("v")))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    samples.sparkSession.createDataFrame(
+      java.util.List.of(org.apache.spark.sql.Row.fromSeq(
+        names.indices.map(counts.getOrElse(_, 0L)))),
+      StructType(names.map(StructField(_, LongType, nullable = false))))
+  }
 
   /** A3 (management.py:151-156): status report. */
   def statusReport(status: DataFrame): DataFrame =

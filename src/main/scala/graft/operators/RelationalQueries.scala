@@ -2078,12 +2078,10 @@ object RelationalQueries {
                 epoch: Long) =>
               // append-only sink: each settled pair emits exactly
               // once (append mode), so the store is the emission log.
-              // Empty batches (everything still buffered behind the
-              // watermark — the NORMAL state of the pre-sentinel
-              // batches here) must not touch the store: a dir of
-              // only _SUCCESS markers would fail schema inference
-              // on the read-back of a degenerate corpus
-              if (!b.isEmpty) wh.append("c17_transitions", b.toDF())
+              // One write per batch, no emptiness probe (it would run
+              // the stateful stage a second time): an empty batch
+              // adds one empty parquet file that carries the schema
+              wh.append("c17_transitions", b.toDF())
             }
             .start())
         import org.apache.spark.sql.types._
@@ -2154,9 +2152,8 @@ object RelationalQueries {
             .outputMode("append")
             .foreachBatch { (b: Dataset[Session], epoch: Long) =>
               // append-only: a session emits exactly once (inline close
-              // or timeout); empty pre-sentinel batches skip the store
-              // (c17's degenerate-corpus schema-inference guard)
-              if (!b.isEmpty) wh.append("c18_sessions", b.toDF())
+              // or timeout)
+              wh.append("c18_sessions", b.toDF())
             }
             .start())
         import org.apache.spark.sql.types._
@@ -2229,10 +2226,8 @@ object RelationalQueries {
           EventStreams.dedupedIngest(_, watermark = "3650 days")
             .writeStream.outputMode("append")
             .foreachBatch { (b: Dataset[Event], epoch: Long) =>
-              // append-only: a key's first sighting emits exactly once;
-              // empty batches skip the store (c17's degenerate-corpus
-              // schema-inference guard)
-              if (!b.isEmpty) wh.append("c19_events", b.toDF())
+              // append-only: a key's first sighting emits exactly once
+              wh.append("c19_events", b.toDF())
             }
             .start())
         import org.apache.spark.sql.types._
@@ -2309,7 +2304,7 @@ object RelationalQueries {
             .foreachBatch { (b: DataFrame, epoch: Long) =>
               // append-only: a window emits once, when the watermark
               // passes its end
-              if (!b.isEmpty) wh.append("c20_hourly", b)
+              wh.append("c20_hourly", b)
             }
             .start())
         import org.apache.spark.sql.types._
@@ -2366,8 +2361,8 @@ object RelationalQueries {
             .writeStream.outputMode("append")
             .foreachBatch { (b: DataFrame, epoch: Long) =>
               // append-only: a pair emits once, when its later side
-              // arrives; match-free batches skip the store
-              if (!b.isEmpty) wh.append("c21_pairs", b)
+              // arrives
+              wh.append("c21_pairs", b)
             }
             .start())
         import org.apache.spark.sql.types._
@@ -2447,7 +2442,7 @@ object RelationalQueries {
               joinType = "left_outer")
             .writeStream.outputMode("append")
             .foreachBatch { (b: DataFrame, epoch: Long) =>
-              if (!b.isEmpty) wh.append("c28_pairs", b)
+              wh.append("c28_pairs", b)
             }
             .start())
         import org.apache.spark.sql.types._

@@ -171,6 +171,37 @@ class ManagerJobsSpec extends SparkTestBase {
       Console.withOut(new java.io.ByteArrayOutputStream)(
         Cli.run(spark, Array("compendium"), Some(deps)))
     }
-    assert(report.nonEmpty && report.forall(_ == "cli: compendium"), report)
+    assert(report === Seq.fill(3)("cli: compendium"), report)
+  }
+
+  test("the compendium report prints the table of two aggregations joined by a crossJoin") {
+    def shown(df: org.apache.spark.sql.DataFrame): String = {
+      val out = new java.io.ByteArrayOutputStream
+      Console.withOut(out)(df.show(truncate = false))
+      out.toString("UTF-8")
+    }
+    def reference(samples: org.apache.spark.sql.DataFrame,
+        counts: org.apache.spark.sql.DataFrame) =
+      samples.agg(countDistinct(col("project")).as("n_projects"),
+        countDistinct(col("srs")).as("n_samples"))
+        .crossJoin(counts.agg(
+          countDistinct(col("sample")).as("n_samples_with_results")))
+    val samples = Seq(("S1", "P1"), ("S2", "P1"), ("S2", "P1"), ("S3", null),
+      (null, "P2"), ("S4", "P3"))
+      .toDF("srs", "project")
+    val counts = Seq(("S1", "A1", 3L), ("S1", "A2", 1L), (null, "A3", 2L),
+      ("S9", "A1", 5L)).toDF("sample", "asv", "count")
+    val wh = new Warehouse(spark, tmpDir())
+    val absent = (wh.readOrEmpty("samples", Schemas.samples),
+      wh.readOrEmpty("asv_counts", Schemas.asvCounts))
+    Seq((samples, counts), absent, (samples, absent._2), (absent._1, counts))
+      .foreach { case (s, c) =>
+        val got = Selection.compendiumSummary(s, c)
+        val want = reference(s, c)
+        assert(got.schema === want.schema)
+        assert(shown(got) === shown(want))
+      }
+    assert(Selection.compendiumSummary(samples, counts).collect().head.toSeq
+      === Seq(3L, 4L, 2L))
   }
 }
