@@ -111,10 +111,4 @@ object Selection {
         names.indices.map(counts.getOrElse(_, 0L)))),
       StructType(names.map(StructField(_, LongType, nullable = false))))
   }
-
-  /** A3 (management.py:151-156): status report. */
-  def statusReport(status: DataFrame): DataFrame =
-    status.groupBy("status")
-      .agg(countDistinct(col("project")).as("n_projects"))
-      .orderBy(desc("n_projects"), asc("status"))
 }

@@ -195,7 +195,7 @@ final class Warehouse(spark: SparkSession, root: String) {
     * The survivors are computed from the OUTPUT frame before the write —
     * a disk re-read after it would see the very rows the sweep must
     * remove. Shared by [[applyCdcPartitioned]] and the partitioned IVM
-    * view upsert ([[graft.streaming.EventStreams]]) so the two
+    * store ([[graft.streaming.IvmStore.Warehouse]]) so the two
     * partition-granular writers can never disagree on sweep semantics.
     */
   private[graft] def overwriteAndSweep(table: String, df: DataFrame,
@@ -326,36 +326,17 @@ final class Warehouse(spark: SparkSession, root: String) {
     // once to drive both the pruned read and the emptied-dir sweep
     val touched = resolvedC.select(partCol).distinct()
       .collect().map(_.get(0)).toSeq
-    applyCdcPartitionedResolved(table, resolvedC, key, seqCol, opCol,
-      partCol, touched)
+    if (touched.nonEmpty) {
+      val base = read(table).filter(col(partCol).isin(touched: _*))
+      val upserts = resolvedC.filter(col(opCol) =!= "D").drop(opCol, seqCol)
+      // broadcast the change-sized key set: the pruned base partitions
+      // are scanned, never shuffled (guide §3.1)
+      val merged = base
+        .join(broadcast(resolvedC.select(key)), Seq(key), "left_anti")
+        .unionByName(upserts.select(base.columns.map(col).toSeq: _*))
+      overwriteAndSweep(table, merged, partCol, touched)
+    }
     resolvedC.unpersist(blocking = false): Unit
-  }
-
-  /** The ALREADY-RESOLVED fast path of [[applyCdcPartitioned]] (table
-    * must exist): `resolved` is the exact
-    * [[Warehouse.resolveLastOp]](changes) output with `partCol` attached
-    * — eagerly materialized by the caller, since three jobs consume it —
-    * and `touched` its distinct `partCol` values, already collected. The
-    * partitioned IVM epoch apply materializes both for its OWN delta
-    * plan, so routing the base apply through them (instead of the public
-    * entry re-running the resolve window, re-checkpointing and
-    * re-collecting per epoch) removes two jobs and a batch
-    * materialization from every micro-batch — and makes "both consumers
-    * share one resolution" true by construction rather than by
-    * resolveLastOp's determinism argument.
-    */
-  private[graft] def applyCdcPartitionedResolved(table: String,
-      resolved: DataFrame, key: String, seqCol: String, opCol: String,
-      partCol: String, touched: Seq[Any]): Unit = {
-    if (touched.isEmpty) return
-    val base = read(table).filter(col(partCol).isin(touched: _*))
-    val upserts = resolved.filter(col(opCol) =!= "D").drop(opCol, seqCol)
-    // broadcast the change-sized key set: the pruned base partitions
-    // are scanned, never shuffled (guide §3.1)
-    val merged = base
-      .join(broadcast(resolved.select(key)), Seq(key), "left_anti")
-      .unionByName(upserts.select(base.columns.map(col).toSeq: _*))
-    overwriteAndSweep(table, merged, partCol, touched)
   }
 
   /** Rewrite via rename-swap. Guarantee: the table directory is missing only

@@ -133,9 +133,6 @@ object Portable {
     aggregate(sequence(lit(1), lit(dim)), lit(0.0),
       (acc, i) => acc + element_at(a, i) * element_at(b, i))
 
-  /** L2 norm (left-to-right accumulation, then sqrt). */
-  def l2norm(a: Column, dim: Int): Column = sqrt(dot(a, a, dim))
-
   /** Deterministic pseudo-random hyperplane component in [-1, 1]:
     * plane `j`, coordinate `i` (both small ints). Derived from md5 so the
     * oracle regenerates the same planes with no literal tables.

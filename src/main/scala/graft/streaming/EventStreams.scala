@@ -2,9 +2,12 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode}
+
+import graft.core.Jobs.described
 
 /** Structured Streaming twins of the batch event queries (SURVEY §2.9).
   *
@@ -279,6 +282,28 @@ object EventStreams extends Serializable {
   final case class CdcViewChange(k: Long, seq: Long, op: String, ck: Long,
       cents: Long)
 
+  /** The streaming query id on the foreachBatch driver thread, where
+    * StreamExecution publishes it as a thread-local property:
+    * "__direct__" outside a query.
+    */
+  private[streaming] def queryIdOf(s: SparkSession): String =
+    Option(s.sparkContext.getLocalProperty("sql.streaming.queryId"))
+      .getOrElse("__direct__")
+
+  /** The foreachBatch sink of every replay-marked applier: `apply` gets
+    * each micro-batch with its epoch and its query's id. The id is stable
+    * across restarts from the SAME checkpoint (where epoch replay must
+    * skip) and fresh for a re-created one (where epochs restart at 0 and
+    * must apply). The caller starts the writer and picks
+    * trigger/checkpoint.
+    */
+  private[streaming] def lineageBatches[T](changes: Dataset[T])(
+      apply: (Dataset[T], Long, String) => Unit): DataStreamWriter[T] =
+    changes.writeStream.outputMode("append")
+      .foreachBatch { (batch: Dataset[T], epoch: Long) =>
+        apply(batch, epoch, queryIdOf(batch.sparkSession))
+      }
+
   /** q51's STREAMING twin — continuous incremental view maintenance:
     * each CDC micro-batch updates BOTH the base snapshot (k, ck, cents)
     * and the per-ck aggregate view (ck, n, cents_total) without ever
@@ -288,53 +313,34 @@ object EventStreams extends Serializable {
     * (unless deleted) — an upsert that moves a key between customers
     * decrements one group and increments the other, which the batch
     * q51 (FK held fixed) never has to express. Deltas roll up at ck
-    * grain, merge into the view through a touched-rows-only full-outer
-    * join (untouched view rows pass through an anti-join — the point
-    * read), and groups whose count reaches 0 are DROPPED, matching the
-    * full recompute which never emits order-less customers. The spec
-    * pins the IVM theorem batch-by-batch: after every micro-batch,
-    * view ≡ groupBy recompute of the just-updated base.
+    * grain and merge into the view ([[mergeViewDelta]]); groups whose
+    * count reaches 0 are DROPPED, matching the full recompute which
+    * never emits order-less customers. The specs pin the IVM theorem
+    * batch-by-batch: after every micro-batch, view ≡ groupBy recompute
+    * of the just-updated base.
     *
     * Replay safety: deltas are NOT idempotent (a re-applied batch
-    * double-counts), so a 1-row `<view>__epoch` sidecar records the
-    * last applied (query id, foreachBatch epoch) and earlier epochs OF
-    * THE SAME QUERY skip — the standard idempotent-foreachBatch
+    * double-counts), so a 1-row-per-lineage `<view>__epoch` sidecar
+    * records the last applied (query id, foreachBatch epoch) and earlier
+    * epochs OF THE SAME QUERY skip — the standard idempotent-foreachBatch
     * discipline. The query id (stable across restarts from one
-    * checkpoint, fresh for a re-created checkpoint) scopes the marker:
-    * a fresh checkpoint restarts epochs at 0, and an epoch-only marker
+    * checkpoint, fresh for a re-created checkpoint) scopes the marker: a
+    * fresh checkpoint restarts epochs at 0, and an epoch-only marker
     * would silently SKIP every batch until the new counter passed the
-    * stale high-water mark — unbounded data loss. The crash window
-    * between the three rename-swaps (view, base, marker) is the honest
-    * non-transactional boundary, same as [[graft.compendium.Warehouse
-    * .replace]]'s documented S3 caveat;
-    * [[graft.compendium.ManifestCommit]] closes it — stage all three
-    * as one commit and a reader can never see them torn.
+    * stale high-water mark — unbounded data loss.
     *
-    * 100 TB: the view update touches |batch keys| base rows and
-    * |affected ck| view rows — point reads, never a base scan; the
-    * full-recompute alternative scans every order ever written per
-    * trigger. BUT this flat form still REWRITES both whole snapshots
-    * per epoch (the reads are bounded; the writes are not) — at fact
-    * scale use [[ivmStreamPartitioned]], the same algebra over
-    * partition-granular stores, where an epoch writes only the
-    * partitions its batch touches (c15-gated). The flat form remains
-    * the dim-scale tool: below ~one partition of data the partitioned
-    * form's per-partition bookkeeping buys nothing.
+    * The `store` decides which rows an epoch reads and how it commits
+    * ([[IvmStore]]): flat or bucketed, rename-swapped on a warehouse or
+    * flipped in one manifest commit. 100 TB: the view update touches
+    * |batch keys| base rows and |affected ck| view rows — point reads,
+    * never a base scan — and over a bucketed store an epoch also WRITES
+    * only the partitions its batch touches (c15/c23/c27-gated); the flat
+    * store rewrites both whole snapshots per epoch, the dim-scale trade.
     */
-  def ivmStream(changes: Dataset[CdcViewChange],
-      wh: graft.compendium.Warehouse, baseTable: String, viewTable: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[CdcViewChange] =
-    changes.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[CdcViewChange], epoch: Long) =>
-        // the streaming query id: stable across restarts from the SAME
-        // checkpoint (where epoch replay must skip), fresh for a
-        // re-created checkpoint (where epochs restart at 0 and must
-        // apply). StreamExecution publishes it as a thread-local
-        // property on the foreachBatch driver thread.
-        val qid = Option(batch.sparkSession.sparkContext
-          .getLocalProperty("sql.streaming.queryId")).getOrElse("__direct__")
-        applyIvmBatch(batch.toDF(), wh, baseTable, viewTable, epoch, qid)
-      }
+  def ivmStream(changes: Dataset[CdcViewChange], store: IvmStore)
+      : DataStreamWriter[CdcViewChange] =
+    lineageBatches(changes)((batch, epoch, queryId) =>
+      applyIvmBatch(batch.toDF(), store, epoch, queryId))
 
   /** Sentinel lineage a LEGACY epoch-only marker migrates to: its old
     * semantics were "this epoch is applied, whoever asks", so the
@@ -353,7 +359,7 @@ object EventStreams extends Serializable {
     * query_id column) migrates to an [[AnyLineage]] floor; a
     * single-(query_id, epoch) row IS a one-entry map.
     */
-  private def markerMarks(wh: graft.compendium.Warehouse,
+  private[streaming] def markerMarks(wh: graft.compendium.Warehouse,
       marker: String): Map[String, Long] =
     if (!wh.exists(marker)) Map.empty
     else marksOfRows(graft.core.TinyParquet.readRows(wh.hadoopConf,
@@ -365,7 +371,7 @@ object EventStreams extends Serializable {
     * reading it through a Spark collect job cost one job per epoch of
     * every IVM replay for a few dozen bytes (guide §1.2).
     */
-  private def markerMarksAt(mc: graft.compendium.ManifestCommit,
+  private[streaming] def markerMarksAt(mc: graft.compendium.ManifestCommit,
       manifest: Map[String, String], marker: String): Map[String, Long] =
     if (!manifest.contains(marker)) Map.empty
     else marksOfRows(graft.core.TinyParquet.readRows(mc.hadoopConf,
@@ -444,21 +450,18 @@ object EventStreams extends Serializable {
     * schema never outlives the first batch that touches it, applied or
     * skipped.
     */
-  private val MarkerCols: Seq[(String, graft.core.TinyParquet.ColType)] =
+  private[streaming] val MarkerCols: Seq[(String, graft.core.TinyParquet.ColType)] =
     Seq("query_id" -> graft.core.TinyParquet.StringCol,
       "epoch" -> graft.core.TinyParquet.LongCol)
 
-  /** On-disk FILE schemas of the IVM store families (partition columns
-    * live in directory names, never in files) — passed to every pruned
-    * store read so relation creation skips parquet footer inference
-    * (~85 ms of driver time per schemaless creation, times ~4 fresh
-    * relations per epoch; guide §1.2). Each matches exactly what the
-    * family's own writer stages.
+  /** On-disk FILE schemas of the join-view store families (partition
+    * columns live in directory names, never in files; the fact side is
+    * [[IvmStore.BaseSchema]]) — passed to every pruned store read so
+    * relation creation skips parquet footer inference (~85 ms of driver
+    * time per schemaless creation, times ~4 fresh relations per epoch;
+    * guide §1.2). Each matches exactly what the family's own writer
+    * stages.
     */
-  private val BaseFileSchema = org.apache.spark.sql.types.StructType
-    .fromDDL("k BIGINT, ck BIGINT, cents BIGINT")
-  private val ViewFileSchema = org.apache.spark.sql.types.StructType
-    .fromDDL("ck BIGINT, n BIGINT, cents_total BIGINT")
   private val JoinViewFileSchema = org.apache.spark.sql.types.StructType
     .fromDDL("k BIGINT, ck BIGINT, cents BIGINT, rate BIGINT")
   private val AggJoinViewFileSchema = org.apache.spark.sql.types.StructType
@@ -467,13 +470,13 @@ object EventStreams extends Serializable {
   private val DimFileSchema = org.apache.spark.sql.types.StructType
     .fromDDL("ck BIGINT, rate BIGINT")
 
-  private def markerRows(marks: Map[String, Long]): Seq[Seq[Any]] =
+  private[streaming] def markerRows(marks: Map[String, Long]): Seq[Seq[Any]] =
     (marks - AnyLineage).toSeq.map { case (q, e) => Seq(q, e) }
 
   /** The marker as a [[graft.compendium.ManifestCommit.TinyTable]] for
     * the direct-staging commit path.
     */
-  private def markerTiny(marks: Map[String, Long])
+  private[streaming] def markerTiny(marks: Map[String, Long])
       : graft.compendium.ManifestCommit.TinyTable =
     (MarkerCols, markerRows(marks))
 
@@ -497,242 +500,17 @@ object EventStreams extends Serializable {
       body: => T): T =
     graft.core.ScopedConf(s, "spark.sql.files.minPartitionNum" -> "1")(body)
 
-  private[graft] def applyIvmBatch(batch: DataFrame,
-      wh: graft.compendium.Warehouse, baseTable: String, viewTable: String,
-      epoch: Long, queryId: String = "__direct__"): Unit =
-    withPackedScans(wh.session) {
-      applyIvmBatchBody(batch, wh, baseTable, viewTable, epoch, queryId)
-    }
-
-  private def applyIvmBatchBody(batch: DataFrame,
-      wh: graft.compendium.Warehouse, baseTable: String, viewTable: String,
-      epoch: Long, queryId: String): Unit = {
-    import org.apache.spark.sql.types._
-    val s = batch.sparkSession
-    import s.implicits._
-    val marker = viewTable + "__epoch"
-    // skip ONLY a replay of this same query's already-applied epoch — a
-    // different query id means a new epoch sequence (fresh checkpoint),
-    // whose epoch 0 is new work, not a replay; the map keeps EVERY
-    // lineage's high water so a zombie predecessor stays refused after
-    // a takeover
-    val marks = markerMarks(wh, marker)
-    if (skipAsReplay(marks, epoch, queryId)(m =>
-        wh.replaceTiny(marker, MarkerCols, markerRows(m)))) return
-    val resolved = graft.compendium.Warehouse.resolveLastOp(batch, "k", "seq")
-    val baseSchema = StructType(Seq(StructField("k", LongType),
-      StructField("ck", LongType), StructField("cents", LongType)))
-    val base = wh.readOrEmpty(baseTable, baseSchema)
-    // point read: only the batch's keys' old rows participate — the
-    // batch's key set enters BROADCAST (change-sized by the CDC
-    // contract), so the base scan is never shuffled (guide §3.1)
-    val old = base.join(broadcast(resolved.select("k")), Seq("k"), "left_semi")
-      .select(col("k"), col("ck").as("old_ck"), col("cents").as("old_cents"))
-    val j = resolved.join(broadcast(old), Seq("k"), "left")
-    val delta = j.filter(col("old_ck").isNotNull)
-      .select(col("old_ck").as("ck"), (-col("old_cents")).as("d_cents"),
-        lit(-1L).as("d_n"))
-      .unionByName(j.filter(col("op") =!= "D")
-        .select(col("ck"), col("cents").as("d_cents"), lit(1L).as("d_n")))
-      .groupBy("ck")
-      .agg(sum("d_cents").as("d_cents"), sum("d_n").as("d_n"))
-    val viewSchema = StructType(Seq(StructField("ck", LongType),
-      StructField("n", LongType), StructField("cents_total", LongType)))
-    // view bootstrap: a pre-existing base with no view yet (first IVM
-    // batch against an already-populated warehouse) must start from the
-    // base's true aggregate — applying deltas onto readOrEmpty's empty
-    // frame would make the view silently, PERMANENTLY wrong (every
-    // pre-existing key's contribution missing). One full recompute,
-    // exactly once; thereafter the view exists and the algebra owns it.
-    val view =
-      if (!wh.exists(viewTable) && wh.exists(baseTable))
-        base.groupBy("ck").agg(count(lit(1)).as("n"),
-          sum("cents").as("cents_total"))
-      else wh.readOrEmpty(viewTable, viewSchema)
-    // (view ⋉ delta) ⟗ delta decomposed into broadcast-joinable legs
-    // (full outer cannot broadcast-hash; guide §3.1): matched view rows
-    // merge in place, delta-only groups append with zeroed view state
-    // through delta ▷ view keys. A left anti join can build only its
-    // right side, so that leg broadcasts the view's key column (or
-    // sort-merges it with the delta, past the broadcast threshold).
-    val touched = view.join(broadcast(delta), Seq("ck"), "inner")
-      .unionByName(delta.join(view.select("ck"), Seq("ck"), "left_anti")
-        .select(col("ck"), lit(null).cast("long").as("n"),
-          lit(null).cast("long").as("cents_total"),
-          col("d_cents"), col("d_n")))
-      .select(col("ck"),
-        (coalesce(col("n"), lit(0L)) + col("d_n")).as("n"),
-        (coalesce(col("cents_total"), lit(0L)) + col("d_cents"))
-          .as("cents_total"))
-      .filter(col("n") > 0)
-    val untouched = view.join(broadcast(delta.select("ck")), Seq("ck"),
-      "left_anti")
-    // ORDER MATTERS: the view plan reads the PRE-batch base (its deltas
-    // were computed against it), so the view swaps FIRST — replace()
-    // stages the full result to a __tmp dir before renaming, so a plan
-    // may read the table it replaces; only after the view is down does
-    // the base swap invalidate the old base files.
-    wh.replace(viewTable, untouched.unionByName(touched))
-    wh.applyCdc(baseTable, batch, "k", "seq", "op")
-    wh.replaceTiny(marker, MarkerCols,
-      markerRows(marks + (queryId -> epoch)))
-  }
-
-  /** [[ivmStream]] with the epoch's three rename-swaps replaced by ONE
-    * [[graft.compendium.ManifestCommit]] flip — the transactional form:
-    * (view, base, marker) stage into fresh versioned directories and
-    * become visible together or not at all, so the documented crash/
-    * visibility window between the flat form's three swaps (a reader
-    * catching the NEW view over the OLD base) is closed structurally,
-    * and the commit-ORDER reasoning the flat form needs ("view swaps
-    * first because its plan reads the pre-batch base") dissolves:
-    * staging never renames the old directories, so every read of the
-    * epoch's plans resolves through the pre-epoch manifest untouched.
-    * Works on rename-less object stores (the create-exclusive flip is
-    * the only commit point). Same delta algebra and replay-marker
-    * semantics as [[ivmStream]]; dim-scale like it (whole-snapshot
-    * staging per epoch) — [[ivmStreamPartitioned]] stays the fact-scale
-    * lever.
+  /** The view merge: previous (ck, n, cents_total) rows full-outer the
+    * epoch delta, zero-coalesced sums, emptied groups dropped — the one
+    * place the view's columns are spelled. Full outer decomposed into
+    * broadcast-joinable legs (full outer cannot broadcast-hash; guide
+    * §3.1): `prev` (store-partition-sized — must never shuffle)
+    * left-joins the broadcast change-sized delta; groups born this epoch
+    * append through a keys-only anti join (the only prev bytes that move
+    * are its group keys, guide §2.3 — the anti join's build side, as a
+    * left anti join builds its right).
     */
-  def ivmStreamCommitted(changes: Dataset[CdcViewChange],
-      mc: graft.compendium.ManifestCommit, baseTable: String,
-      viewTable: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[CdcViewChange] =
-    changes.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[CdcViewChange], epoch: Long) =>
-        val qid = Option(batch.sparkSession.sparkContext
-          .getLocalProperty("sql.streaming.queryId")).getOrElse("__direct__")
-        applyIvmBatchCommitted(batch.toDF(), mc, baseTable, viewTable,
-          epoch, qid)
-      }
-
-  private[graft] def applyIvmBatchCommitted(batch: DataFrame,
-      mc: graft.compendium.ManifestCommit, baseTable: String,
-      viewTable: String, epoch: Long, queryId: String = "__direct__"): Unit = {
-    import org.apache.spark.sql.types._
-    val s = batch.sparkSession
-    import s.implicits._
-    val marker = viewTable + "__epoch"
-    // ONE manifest resolution scopes the whole epoch: every read below
-    // sees the same committed (base, view, marker) trio
-    val snap = mc.current()
-    val marks =
-      markerMarksAt(mc, snap, marker)
-    if (skipAsReplay(marks, epoch, queryId)(m =>
-        mc.commit(Map.empty, tiny = Map(marker -> markerTiny(m))))) return
-    val resolved = graft.compendium.Warehouse.resolveLastOp(batch, "k", "seq")
-    val baseSchema = StructType(Seq(StructField("k", LongType),
-      StructField("ck", LongType), StructField("cents", LongType)))
-    val base =
-      if (snap.contains(baseTable))
-        mc.readAt(snap, baseTable, Some(BaseFileSchema))
-      else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        baseSchema)
-    val old = base.join(resolved.select("k"), Seq("k"), "left_semi")
-      .select(col("k"), col("ck").as("old_ck"), col("cents").as("old_cents"))
-    val j = resolved.join(old, Seq("k"), "left")
-    val delta = j.filter(col("old_ck").isNotNull)
-      .select(col("old_ck").as("ck"), (-col("old_cents")).as("d_cents"),
-        lit(-1L).as("d_n"))
-      .unionByName(j.filter(col("op") =!= "D")
-        .select(col("ck"), col("cents").as("d_cents"), lit(1L).as("d_n")))
-      .groupBy("ck")
-      .agg(sum("d_cents").as("d_cents"), sum("d_n").as("d_n"))
-    val viewSchema = StructType(Seq(StructField("ck", LongType),
-      StructField("n", LongType), StructField("cents_total", LongType)))
-    val view =
-      if (!snap.contains(viewTable) && snap.contains(baseTable))
-        base.groupBy("ck").agg(count(lit(1)).as("n"),
-          sum("cents").as("cents_total"))
-      else if (snap.contains(viewTable))
-        mc.readAt(snap, viewTable, Some(ViewFileSchema))
-      else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        viewSchema)
-    val touched = view.join(delta.select("ck"), Seq("ck"), "left_semi")
-      .join(delta, Seq("ck"), "full_outer")
-      .select(col("ck"),
-        (coalesce(col("n"), lit(0L)) + col("d_n")).as("n"),
-        (coalesce(col("cents_total"), lit(0L)) + col("d_cents"))
-          .as("cents_total"))
-      .filter(col("n") > 0)
-    val untouched = view.join(delta.select("ck"), Seq("ck"), "left_anti")
-    val upserts = resolved.filter(col("op") =!= "D").drop("op", "seq")
-    val newBase = base.join(resolved.select("k"), Seq("k"), "left_anti")
-      .unionByName(upserts.select(base.columns.map(col).toSeq: _*))
-    // ONE flip: staging writes fresh directories (the old ones are never
-    // renamed, so the plans above read them safely mid-commit), then the
-    // trio becomes visible atomically — no commit-order reasoning left
-    mc.commit(Map(
-      viewTable -> untouched.unionByName(touched),
-      baseTable -> newBase),
-      tiny = Map(marker -> markerTiny(marks + (queryId -> epoch))))
-    : Unit
-  }
-
-  /** [[ivmStream]] over PARTITION-GRANULAR stores — the continuous path's
-    * scale fix: the flat form's per-epoch cost is two whole-snapshot
-    * rewrites however few keys the batch touches (a full-table write per
-    * trigger at 100 TB); here base AND view live partitioned by a stable
-    * key bucket (base: pk = k mod buckets, view: pck = ck mod buckets)
-    * and an epoch writes ONLY the partitions its batch touches — the
-    * base through [[graft.compendium.Warehouse.applyCdcPartitioned]]
-    * (pruned read, dynamic partition overwrite, emptied-partition
-    * sweep), the view through the same overwrite-and-sweep at pck
-    * grain. Untouched partitions' files stay byte-identical on disk
-    * (spec-pinned), so per-epoch write volume is proportional to the
-    * BATCH's key spread, not the store: at 100 TB with
-    * date/bucket-partitioned facts and clustered change batches, the
-    * difference between rewriting gigabytes and rewriting the lake.
-    * Same delta algebra, replay marker, and view-before-base commit
-    * order as the flat form — the two paths share
-    * [[graft.compendium.Warehouse.resolveLastOp]], so they can never
-    * disagree on which row of a batch wins.
-    *
-    * `compactEvery` (0 = off) is the AUTO-MAINTENANCE cadence every
-    * partitioned streaming store needs: each epoch leaves one file per
-    * touched partition, so a hot partition accretes files at the
-    * trigger rate; every `compactEvery`-th epoch runs
-    * [[graft.compendium.Warehouse.compactPartitions]] over base and
-    * view — only over-budget partitions rewrite (per-partition
-    * rename-swap, readers unaffected), so a healthy store pays one file
-    * listing. Runs AFTER the epoch's marker commit: compaction is
-    * row-preserving and idempotent, so a crash between apply and
-    * compact loses only maintenance, never data.
-    */
-  def ivmStreamPartitioned(changes: Dataset[CdcViewChange],
-      wh: graft.compendium.Warehouse, baseTable: String, viewTable: String,
-      buckets: Int = 16, compactEvery: Int = 0,
-      targetFileBytes: Long = 128L << 20)
-      : org.apache.spark.sql.streaming.DataStreamWriter[CdcViewChange] =
-    changes.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[CdcViewChange], epoch: Long) =>
-        val qid = Option(batch.sparkSession.sparkContext
-          .getLocalProperty("sql.streaming.queryId")).getOrElse("__direct__")
-        applyIvmBatchPartitioned(batch.toDF(), wh, baseTable, viewTable,
-          epoch, qid, buckets)
-        if (compactEvery > 0 && epoch % compactEvery == compactEvery - 1L) {
-          Seq(baseTable, viewTable).foreach { t =>
-            if (wh.exists(t)) wh.compactPartitions(t, targetFileBytes): Unit
-          }
-        }
-      }
-
-  /** The partition-granular forms' view merge: previous (ck, n,
-    * cents_total) rows full-outer the epoch delta, zero-coalesced sums,
-    * emptied groups dropped, partition column re-derived. ONE body for
-    * the four call sites across [[applyIvmBatchPartitioned]] and
-    * [[applyIvmBatchPartitionedCommitted]] (live-view merge and
-    * bootstrap in each), so the merge algebra cannot drift between the
-    * partitioned paths.
-    */
-  private def mergeViewDelta(prev: DataFrame, delta: DataFrame,
-      nb: org.apache.spark.sql.Column): DataFrame =
-    // full outer decomposed into broadcast-joinable legs (full outer
-    // cannot broadcast-hash; guide §3.1): prev (store-partition-sized —
-    // must never shuffle) left-joins the broadcast change-sized delta;
-    // groups born this epoch append through a keys-only anti join (the
-    // only prev bytes that move are its group keys, guide §2.3 — the
-    // anti join's build side, as a left anti join builds its right).
+  private def mergeViewDelta(prev: DataFrame, delta: DataFrame): DataFrame =
     prev.join(broadcast(delta), Seq("ck"), "left")
       .unionByName(delta.join(prev.select("ck"), Seq("ck"), "left_anti")
         .select(col("ck"), lit(null).cast("long").as("n"),
@@ -744,241 +522,99 @@ object EventStreams extends Serializable {
         (coalesce(col("cents_total"), lit(0L)) +
           coalesce(col("d_cents"), lit(0L))).as("cents_total"))
       .filter(col("n") > 0)
-      .withColumn("pck", pmod(col("ck"), nb))
 
-  private[graft] def applyIvmBatchPartitioned(batch: DataFrame,
-      wh: graft.compendium.Warehouse, baseTable: String, viewTable: String,
-      epoch: Long, queryId: String = "__direct__", buckets: Int = 16): Unit =
-    withPackedScans(wh.session) {
-      applyIvmBatchPartitionedBody(batch, wh, baseTable, viewTable, epoch,
-        queryId, buckets)
-    }
-
-  private def applyIvmBatchPartitionedBody(batch: DataFrame,
-      wh: graft.compendium.Warehouse, baseTable: String, viewTable: String,
-      epoch: Long, queryId: String, buckets: Int): Unit = {
-    import org.apache.spark.sql.types._
-    val s = batch.sparkSession
-    import s.implicits._
-    val nb = lit(buckets.toLong)
-    val marker = viewTable + "__epoch"
-    val marks = markerMarks(wh, marker)
-    if (skipAsReplay(marks, epoch, queryId)(m =>
-        wh.replaceTiny(marker, MarkerCols, markerRows(m)))) return
-    // change-sized, consumed by THREE downstream jobs (touched-pk
-    // collect, delta, view merge) — eager-checkpointed so the per-epoch
-    // job count doesn't multiply the resolve window (the t42/d09
-    // discipline; measured: the uncheckpointed form re-ran it 5×/epoch)
-    val resolved = graft.compendium.Warehouse.resolveLastOp(batch, "k", "seq")
-      .localCheckpoint(true)
-    val baseExists = wh.exists(baseTable)
-    // the batch's base partitions — batch-bounded (≤ buckets values),
-    // collected once to prune the old-rows point read to the only
-    // directories that can hold a touched key's previous row
-    val touchedPk = resolved.select(pmod(col("k"), nb).as("pk"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    val baseSchema = StructType(Seq(StructField("k", LongType),
-      StructField("ck", LongType), StructField("cents", LongType)))
-    val basePruned =
-      if (baseExists)
-        wh.read(baseTable).filter(col("pk").isin(touchedPk: _*))
-      else wh.readOrEmpty(baseTable, baseSchema)
-    // batch keys enter BROADCAST (change-sized by the CDC contract), so
-    // the pruned base partitions are scanned, never shuffled (guide §3.1)
-    val old = basePruned
-      .join(broadcast(resolved.select("k")), Seq("k"), "left_semi")
-      .select(col("k"), col("ck").as("old_ck"), col("cents").as("old_cents"))
-    val j = resolved.join(broadcast(old), Seq("k"), "left")
-    val delta = j.filter(col("old_ck").isNotNull)
-      .select(col("old_ck").as("ck"), (-col("old_cents")).as("d_cents"),
-        lit(-1L).as("d_n"))
-      .unionByName(j.filter(col("op") =!= "D")
-        .select(col("ck"), col("cents").as("d_cents"), lit(1L).as("d_n")))
-      .groupBy("ck")
-      .agg(sum("d_cents").as("d_cents"), sum("d_n").as("d_n"))
-      // change-sized (≤ 2·|batch keys| groups), consumed by the
-      // touched-pck collect AND the view merge — checkpoint for the
-      // same reason as `resolved`
-      .localCheckpoint(true)
-    // the batch's view partitions — the only pck directories this epoch
-    // may rewrite
-    val touchedPck = delta.select(pmod(col("ck"), nb).as("pck"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    if (wh.exists(viewTable)) {
-      if (touchedPck.nonEmpty) {
-        // pruned merge: partition-mates of touched groups rewrite with
-        // their partition (d_* coalesce to 0); untouched partitions are
-        // never read, never written
-        val viewPruned = wh.read(viewTable)
-          .filter(col("pck").isin(touchedPck: _*))
-          .select("ck", "n", "cents_total")
-        val merged = mergeViewDelta(viewPruned, delta, nb)
-        wh.overwriteAndSweep(viewTable, merged, "pck", touchedPck)
-      }
-    } else {
-      // view bootstrap — the flat form's argument verbatim: a
-      // pre-existing base with no view must seed from the base's true
-      // aggregate (one FULL scan, exactly once); thereafter every epoch
-      // is partition-pruned
-      val seed =
-        if (baseExists)
-          wh.read(baseTable).groupBy("ck").agg(count(lit(1)).as("n"),
-            sum("cents").as("cents_total"))
-        else delta.limit(0).select(col("ck"), col("d_n").as("n"),
-          col("d_cents").as("cents_total"))
-      val merged = mergeViewDelta(seed, delta, nb)
-      if (!merged.isEmpty)
-        wh.overwritePartitions(viewTable, merged, Seq("pck"))
-    }
-    // base after view (the flat form's commit-order reasoning): the view
-    // plan's deltas were computed against the pre-batch base partitions.
-    // The apply REUSES this epoch's checkpointed resolution and touched
-    // set (applyCdcPartitionedResolved) — the two consumers share one
-    // resolution by construction, and the epoch sheds the second resolve
-    // window + collect the public entry would re-run. Only the
-    // table-creation epoch (no base yet) takes the public path.
-    if (baseExists)
-      wh.applyCdcPartitionedResolved(baseTable,
-        resolved.withColumn("pk", pmod(col("k"), nb)),
-        "k", "seq", "op", "pk", touchedPk.map(v => v: Any))
-    else
-      wh.applyCdcPartitioned(baseTable, batch, "k", "seq", "op", "pk",
-        c => pmod(c, nb))
-    wh.replaceTiny(marker, MarkerCols,
-      markerRows(marks + (queryId -> epoch)))
-    resolved.unpersist(blocking = false)
-    delta.unpersist(blocking = false): Unit
-  }
-
-  /** [[ivmStreamPartitioned]] × [[ivmStreamCommitted]] — the fact-scale
-    * path with the transactional flip: per-epoch write volume stays
-    * proportional to the batch's key spread (only touched `pk`/`pck`
-    * partitions stage, untouched partition directories carry forward
-    * byte-identical), AND the whole epoch — touched base partitions,
-    * touched view partitions, replay marker — becomes visible in ONE
-    * [[graft.compendium.ManifestCommit]] manifest create. This closes
-    * the partitioned form's remaining torn window (a reader interleaved
-    * between its view overwrite and base overwrite sees a NEW view over
-    * an OLD base) the same way the flat committed form closed its
-    * three-rename window: staging never touches a directory an older
-    * manifest names, so a held resolution stays pairwise-consistent and
-    * the commit-order reasoning dissolves. Works on rename-less object
-    * stores. Same delta algebra and per-lineage replay-marker semantics
-    * as the other three forms (shared resolveLastOp / marks machinery —
-    * the paths cannot disagree on which row of a batch wins).
+  /** Applies one CDC batch (k, seq, op, ck, cents) to `store` as epoch
+    * `epoch` of lineage `queryId` — the [[ivmStream]] epoch, callable
+    * directly (a bootstrap, a spec).
     */
-  def ivmStreamPartitionedCommitted(changes: Dataset[CdcViewChange],
-      mc: graft.compendium.ManifestCommit, baseTable: String,
-      viewTable: String, buckets: Int = 16)
-      : org.apache.spark.sql.streaming.DataStreamWriter[CdcViewChange] =
-    changes.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[CdcViewChange], epoch: Long) =>
-        val qid = Option(batch.sparkSession.sparkContext
-          .getLocalProperty("sql.streaming.queryId")).getOrElse("__direct__")
-        applyIvmBatchPartitionedCommitted(batch.toDF(), mc, baseTable,
-          viewTable, epoch, qid, buckets)
-      }
+  private[graft] def applyIvmBatch(batch: DataFrame, store: IvmStore,
+      epoch: Long, queryId: String = "__direct__"): Unit =
+    withPackedScans(store.session)(ivmEpoch(batch, store, epoch, queryId))
 
-  private[graft] def applyIvmBatchPartitionedCommitted(batch: DataFrame,
-      mc: graft.compendium.ManifestCommit, baseTable: String,
-      viewTable: String, epoch: Long, queryId: String = "__direct__",
-      buckets: Int = 16): Unit =
-    withPackedScans(mc.session) {
-      applyIvmBatchPartitionedCommittedBody(batch, mc, baseTable, viewTable,
-        epoch, queryId, buckets)
-    }
-
-  private def applyIvmBatchPartitionedCommittedBody(batch: DataFrame,
-      mc: graft.compendium.ManifestCommit, baseTable: String,
-      viewTable: String, epoch: Long, queryId: String,
-      buckets: Int): Unit = {
-    val s = batch.sparkSession
-    val nb = lit(buckets.toLong)
-    val marker = viewTable + "__epoch"
-    if (batch.isEmpty) return
-    // ONE manifest resolution scopes every read of the epoch
-    val snap = mc.current()
-    val marks =
-      markerMarksAt(mc, snap, marker)
-    if (skipAsReplay(marks, epoch, queryId)(m =>
-        mc.commit(Map.empty, tiny = Map(marker -> markerTiny(m))))) return
-    // change-sized, consumed by three downstream jobs — checkpointed so
-    // the per-epoch job count doesn't multiply the resolve window
-    val resolved = graft.compendium.Warehouse.resolveLastOp(batch, "k", "seq")
-      .localCheckpoint(true)
-    val touchedPk = resolved.select(pmod(col("k"), nb).as("pk"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    val baseExists = mc.partitionKeys(snap, baseTable).nonEmpty
-    // pruned point read: only the touched pk directories are opened —
-    // pruning is STRUCTURAL here (the untouched directories are never
-    // even listed; the manifest is the index). ONE multi-path relation,
-    // pk restored from k (it is derivable — that is why the store
-    // bucketing uses k mod B): the per-directory unioned form pays
-    // O(dirs × consumer jobs) driver-side listing/footer work per epoch
-    val basePruned = mc
-      .readPartitionPathsAt(snap, baseTable, "pk", touchedPk,
-        Some(BaseFileSchema))
-      .map(_.withColumn("pk", pmod(col("k"), nb)))
-      .getOrElse(resolved.limit(0)
-        .select(col("k"), col("ck").cast("long").as("ck"),
-          col("cents").cast("long").as("cents"), pmod(col("k"), nb).as("pk")))
-    // batch keys enter BROADCAST (change-sized by the CDC contract), so
-    // the pruned base partitions are scanned, never shuffled (guide §3.1)
-    val old = basePruned
-      .join(broadcast(resolved.select("k")), Seq("k"), "left_semi")
+  /** The epoch: resolved → old rows → delta → merged view → new base,
+    * committed by the store. Each phase's jobs carry its label (`ivm:
+    * resolve`, `ivm: touched`, then `ivm: view` / `ivm: base` or the
+    * manifest's `mc: stage`).
+    *
+    * Over a bucketed store the resolution and the delta are
+    * change-sized and each feeds several jobs (touched collect, delta,
+    * view merge, base rewrite), so both are eagerly checkpointed (the
+    * t42/d09 discipline; measured: uncheckpointed, the resolve window
+    * re-ran 5× per epoch), and their touched buckets are collected once
+    * to prune every read and bound every write. At one bucket there is
+    * nothing to prune: no collect, no checkpoint, and the one bucket
+    * counts as touched.
+    *
+    * An empty batch changes nothing but the marker, decided from the
+    * touched sets: no touched base bucket means no base write, no
+    * touched view bucket no view write — except that an absent view
+    * still bootstraps.
+    */
+  private def ivmEpoch(batch: DataFrame, store: IvmStore, epoch: Long,
+      queryId: String): Unit = {
+    val s = store.session
+    val ep = store.open()
+    // skip ONLY a replay of this same query's already-applied epoch — a
+    // different query id means a new epoch sequence (fresh checkpoint),
+    // whose epoch 0 is new work, not a replay; the map keeps EVERY
+    // lineage's high water so a zombie predecessor stays refused after
+    // a takeover
+    if (skipAsReplay(ep.marks, epoch, queryId)(ep.commitMarker)) return
+    val pruned = store.buckets > 1
+    val nb = lit(store.buckets.toLong)
+    def once(df: DataFrame) = if (pruned) df.localCheckpoint(true) else df
+    def touched(df: DataFrame, key: String): Seq[Long] =
+      if (pruned) df.select(pmod(col(key), nb)).distinct().collect()
+        .map(_.getLong(0)).toSeq
+      else Seq(0L)
+    val resolved = described(s, "ivm: resolve")(
+      once(graft.compendium.Warehouse.resolveLastOp(batch, "k", "seq")))
+    val touchedPk = described(s, "ivm: touched")(touched(resolved, "k"))
+    val keys = broadcast(resolved.select("k"))
+    val base = ep.base(touchedPk)
+    // point read: only the batch's keys' old rows participate — the
+    // batch's key set enters BROADCAST (change-sized by the CDC
+    // contract), so the base scan is never shuffled (guide §3.1)
+    val old = base.join(keys, Seq("k"), "left_semi")
       .select(col("k"), col("ck").as("old_ck"), col("cents").as("old_cents"))
     val j = resolved.join(broadcast(old), Seq("k"), "left")
-    val delta = j.filter(col("old_ck").isNotNull)
-      .select(col("old_ck").as("ck"), (-col("old_cents")).as("d_cents"),
-        lit(-1L).as("d_n"))
-      .unionByName(j.filter(col("op") =!= "D")
-        .select(col("ck"), col("cents").as("d_cents"), lit(1L).as("d_n")))
-      .groupBy("ck")
-      .agg(sum("d_cents").as("d_cents"), sum("d_n").as("d_n"))
-      .localCheckpoint(true)
-    val touchedPck = delta.select(pmod(col("ck"), nb).as("pck"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    val viewExists = mc.partitionKeys(snap, viewTable).nonEmpty
-    // the view's new content for ITS touched partitions — or, on first
-    // attach over a pre-existing base, the one full-aggregate bootstrap
-    // (the flat form's argument verbatim), after which every epoch is
-    // partition-pruned
-    val (mergedView, viewTouched) =
-      if (viewExists) {
-        val viewPruned = mc
-          .readPartitionPathsAt(snap, viewTable, "pck", touchedPck,
-            Some(ViewFileSchema))
-          .map(_.select("ck", "n", "cents_total"))
-          .getOrElse(delta.limit(0).select(col("ck"),
-            col("d_n").as("n"), col("d_cents").as("cents_total")))
-        (mergeViewDelta(viewPruned, delta, nb), touchedPck)
-      } else {
-        val seed =
-          if (baseExists)
-            mc.readPartitionPathsAt(snap, baseTable, "pk",
-              mc.partitionValues(snap, baseTable), Some(BaseFileSchema)).get
-              .groupBy("ck").agg(count(lit(1)).as("n"),
-                sum("cents").as("cents_total"))
-          else delta.limit(0).select(col("ck"), col("d_n").as("n"),
-            col("d_cents").as("cents_total"))
-        (mergeViewDelta(seed, delta, nb), Seq.empty[Long])
-      }
-    // the touched base partitions' new content: survivors ∪ upserts
-    val upserts = resolved.filter(col("op") =!= "D")
-      .select(col("k"), col("ck"), col("cents"))
-      .withColumn("pk", pmod(col("k"), nb))
-    val newBase = basePruned
-      .join(broadcast(resolved.select("k")), Seq("k"), "left_anti")
-      .select(col("k"), col("ck"), col("cents"), col("pk"))
-      .unionByName(upserts)
-    // ONE flip: (base pk-partitions, view pck-partitions, marker)
-    mc.commitPartitioned(
-      Map(
-        baseTable -> (("pk", newBase, touchedPk)),
-        viewTable -> (("pck", mergedView, viewTouched))),
-      tiny = Map(marker -> markerTiny(marks + (queryId -> epoch))))
-    resolved.unpersist(blocking = false)
-    delta.unpersist(blocking = false): Unit
+    val (delta, touchedPck) = described(s, "ivm: touched") {
+      val d = once(j.filter(col("old_ck").isNotNull)
+        .select(col("old_ck").as("ck"), (-col("old_cents")).as("d_cents"),
+          lit(-1L).as("d_n"))
+        .unionByName(j.filter(col("op") =!= "D")
+          .select(col("ck"), col("cents").as("d_cents"), lit(1L).as("d_n")))
+        .groupBy("ck")
+        .agg(sum("d_cents").as("d_cents"), sum("d_n").as("d_n")))
+      (d, touched(d, "ck"))
+    }
+    import IvmStore.Write
+    // the touched view buckets merge in place (their untouched groups
+    // ride along with zero deltas). View bootstrap: a pre-existing base
+    // with no view yet (first IVM batch against an already-populated
+    // store) must start from the base's true aggregate — deltas onto an
+    // empty view would make it silently, PERMANENTLY wrong (every
+    // pre-existing key's contribution missing). One full scan, exactly
+    // once; thereafter the view exists and the algebra owns it.
+    val view =
+      if (ep.viewExists)
+        Option.when(touchedPck.nonEmpty)(
+          Write(mergeViewDelta(ep.view(touchedPck), delta), touchedPck))
+      else Option.when(ep.baseExists || touchedPck.nonEmpty)(
+        Write(mergeViewDelta(ep.wholeBase.groupBy("ck")
+          .agg(count(lit(1)).as("n"), sum("cents").as("cents_total")),
+          delta), Nil))
+    // the touched base buckets' new content: survivors ∪ upserts
+    val newBase = Option.when(touchedPk.nonEmpty)(Write(
+      base.join(keys, Seq("k"), "left_anti")
+        .unionByName(resolved.filter(col("op") =!= "D")
+          .select("k", "ck", "cents")),
+      touchedPk))
+    ep.commit(view, newBase, ep.marks + (queryId -> epoch), epoch)
+    if (pruned) {
+      resolved.unpersist(blocking = false)
+      delta.unpersist(blocking = false): Unit
+    }
   }
 
   /** One change on a TWO-TABLE CDC bus: `side` names the table ('A' the
@@ -1026,13 +662,9 @@ object EventStreams extends Serializable {
       mc: graft.compendium.ManifestCommit, aTable: String, bTable: String,
       viewTable: String, buckets: Int = 16)
       : org.apache.spark.sql.streaming.DataStreamWriter[CdcJoinChange] =
-    changes.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[CdcJoinChange], epoch: Long) =>
-        val qid = Option(batch.sparkSession.sparkContext
-          .getLocalProperty("sql.streaming.queryId")).getOrElse("__direct__")
-        applyIvmJoinBatch(batch.toDF(), mc, aTable, bTable, viewTable,
-          epoch, qid, buckets)
-      }
+    lineageBatches(changes)((batch, epoch, queryId) =>
+      applyIvmJoinBatch(batch.toDF(), mc, aTable, bTable, viewTable,
+        epoch, queryId, buckets))
 
   /** The two-sided appliers' shared point-apply scaffolding (c24's join
     * view AND c25's aggregate view): per-side last-op resolution, the
@@ -1071,7 +703,6 @@ object EventStreams extends Serializable {
       aTable: String, bTable: String,
       nb: org.apache.spark.sql.Column): TwoSidedCdc = {
     val s = batch.sparkSession
-    import graft.core.Jobs.described
     // per-side last-op resolution — the shared total-order discipline.
     // The two sides are independent change-sized materializations, so
     // they run concurrently (guide §2.6): wall = max, not sum, of the
@@ -1112,7 +743,7 @@ object EventStreams extends Serializable {
     val touchedPk = touchedBoth.filter(_.getString(1) == "A")
       .map(_.getLong(0)).toSeq
     val aPruned = mc.readPartitionPathsAt(snap, aTable, "pk", touchedPk,
-        Some(BaseFileSchema))
+        Some(IvmStore.BaseSchema))
       .map(_.withColumn("pk", pmod(col("k"), nb)))
       .getOrElse(ra.limit(0).select(col("k"), col("ck"), col("cents"),
         pmod(col("k"), nb).as("pk")))
@@ -1198,7 +829,7 @@ object EventStreams extends Serializable {
       snap: Map[String, String], aTable: String, bTable: String,
       t: TwoSidedCdc): (DataFrame, DataFrame) = {
     val aAll = mc.readPartitionPathsAt(snap, aTable, "pk",
-        mc.partitionValues(snap, aTable), Some(BaseFileSchema))
+        mc.partitionValues(snap, aTable), Some(IvmStore.BaseSchema))
       .map(_.select("k", "ck", "cents"))
       .getOrElse(t.ra.limit(0).select("k", "ck", "cents"))
     val bAll = mc.readPartitionPathsAt(snap, bTable, "pbk",
@@ -1231,7 +862,7 @@ object EventStreams extends Serializable {
     if (skipAsReplay(marks, epoch, queryId)(m =>
         mc.commit(Map.empty, tiny = Map(marker -> markerTiny(m))))) return
     val t = twoSidedPointApply(batch, mc, snap, aTable, bTable, nb)
-    // view bootstrap (the single-sided discipline at :454-460): a
+    // view bootstrap ([[applyIvmBatch]]'s discipline): a
     // pre-existing base with no view recomputes A ⟕ B ONCE at the
     // snapshot, and this epoch commits EVERY view partition; thereafter
     // the view exists and the point algebra owns it
@@ -1339,13 +970,9 @@ object EventStreams extends Serializable {
       mc: graft.compendium.ManifestCommit, aTable: String, bTable: String,
       viewTable: String, buckets: Int = 16)
       : org.apache.spark.sql.streaming.DataStreamWriter[CdcJoinChange] =
-    changes.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[CdcJoinChange], epoch: Long) =>
-        val qid = Option(batch.sparkSession.sparkContext
-          .getLocalProperty("sql.streaming.queryId")).getOrElse("__direct__")
-        applyIvmAggJoinBatch(batch.toDF(), mc, aTable, bTable, viewTable,
-          epoch, qid, buckets)
-      }
+    lineageBatches(changes)((batch, epoch, queryId) =>
+      applyIvmAggJoinBatch(batch.toDF(), mc, aTable, bTable, viewTable,
+        epoch, queryId, buckets))
 
   private[graft] def applyIvmAggJoinBatch(batch: DataFrame,
       mc: graft.compendium.ManifestCommit, aTable: String, bTable: String,
@@ -1386,7 +1013,7 @@ object EventStreams extends Serializable {
       .agg(sum("d_n").as("d_n"), sum("d_cents").as("d_cents"))
     // touched groups = fact-delta groups ∪ dim-changed groups — exactly
     // the shared touchedPck (delta's group keys ARE old_ck ∪ non-D ck).
-    // View bootstrap (the single-sided discipline at :454-460): a
+    // View bootstrap ([[applyIvmBatch]]'s discipline): a
     // pre-existing base with no view recomputes γ_ck(A) ⟕ B ONCE at the
     // snapshot — with the sufficient statistic stored, as the seed
     // does — and this epoch commits EVERY view partition; thereafter
@@ -1469,18 +1096,6 @@ object EventStreams extends Serializable {
         v.withColumn("pck", pmod(col("ck"), nb)), (0L until buckets).toSeq))))
     : Unit
   }
-
-  /** Stream-static enrichment join: the event stream against a STATIC
-    * reference frame (a dimension table). No state, no watermark — the
-    * static side is (re)resolved per micro-batch and broadcast under the
-    * usual threshold, so a file-backed dim picks up replacements between
-    * batches. This is the reference-data shape for a 100 TB/day stream:
-    * the stream never shuffles; only the dim moves. Left join so events
-    * without reference rows pass through (enrichment must not drop data).
-    */
-  def enrichedIngest(events: Dataset[Event], dim: DataFrame): DataFrame =
-    events.toDF().join(
-      org.apache.spark.sql.functions.broadcast(dim), Seq("user_id"), "left")
 
   /** Stream-stream time-interval join — the streaming twin of
     * q34_event_attribution: each purchase joins the SAME user's clicks

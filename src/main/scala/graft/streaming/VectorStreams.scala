@@ -105,8 +105,7 @@ object VectorStreams {
     // empty batches must not rewrite a store-sized table and burn a
     // manifest version (the c17 empty-batch discipline)
     if (batch.isEmpty) return false
-    val queryId = Option(s.sparkContext
-      .getLocalProperty("sql.streaming.queryId")).getOrElse("__direct__")
+    val queryId = EventStreams.queryIdOf(s)
     val mc = new ManifestCommit(s, root)
     val cur = mc.current()
     // per-LINEAGE high-water map, not one latest-writer row: with a
@@ -199,8 +198,6 @@ object VectorStreams {
     */
   def forgetIngest(tombstones: Dataset[Tombstone], root: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[Tombstone] =
-    tombstones.writeStream.foreachBatch {
-      (batch: Dataset[Tombstone], batchId: Long) =>
-        applyForgetBatch(batch, root, batchId); ()
-    }
+    EventStreams.lineageBatches(tombstones)((batch, batchId, _) =>
+      applyForgetBatch(batch, root, batchId): Unit)
 }

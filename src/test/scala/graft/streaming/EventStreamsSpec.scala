@@ -542,34 +542,6 @@ class EventStreamsSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  test("stream-static enrichment joins the broadcast dim, keeps unmatched events") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    val dimPath = tmpDir()
-    Seq((1L, "gold"), (2L, "basic")).toDF("user_id", "tier")
-      .write.mode("overwrite").parquet(dimPath)
-    val dim = spark.read.parquet(dimPath)
-    val in = MemoryStream[EventStreams.Event]
-    val q = EventStreams.enrichedIngest(in.toDS(), dim)
-      .select(col("event_id"), col("user_id"), col("tier"))
-      .writeStream.format("memory").queryName("enriched")
-      .outputMode("append").start()
-    try {
-      in.addData(
-        EventStreams.Event(1, ts("10:00"), 1, "click", 1.0),
-        EventStreams.Event(2, ts("10:01"), 2, "view", 2.0),
-        EventStreams.Event(3, ts("10:02"), 7, "click", 3.0)) // no dim row
-      q.processAllAvailable()
-      val got = spark.table("enriched").collect()
-        .map(r => (r.getLong(0), r.getLong(1), Option(r.getString(2))))
-        .sortBy(_._1).toSeq
-      assert(got === Seq(
-        (1L, 1L, Some("gold")),
-        (2L, 2L, Some("basic")),
-        (3L, 7L, None)))
-    } finally q.stop()
-  }
-
   test("warehouse ingest: dedup inside the watermark, keyed upsert beyond it") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
@@ -661,7 +633,8 @@ class EventStreamsSpec extends SparkTestBase {
       wh.read("ivm_view").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val in = MemoryStream[EventStreams.CdcViewChange]
-    val q = EventStreams.ivmStream(in.toDS(), wh, "ivm_base", "ivm_view")
+    val q = EventStreams.ivmStream(in.toDS(),
+      IvmStore.Warehouse(wh, "ivm_base", "ivm_view"))
       .start()
     val qid = q.id.toString
     try {
@@ -689,7 +662,7 @@ class EventStreamsSpec extends SparkTestBase {
     val before = view()
     EventStreams.applyIvmBatch(
       Seq(EventStreams.CdcViewChange(1, 5, "D", 0, 0)).toDF(),
-      wh, "ivm_base", "ivm_view", epoch = 0L, queryId = qid)
+      IvmStore.Warehouse(wh, "ivm_base", "ivm_view"), epoch = 0L, queryId = qid)
     assert(view() === before, "stale epoch must skip (no double-apply)")
   }
 
@@ -710,7 +683,8 @@ class EventStreamsSpec extends SparkTestBase {
     val ckpt = tmpDir()
     val in = MemoryStream[EventStreams.CdcViewChange]
     def start() =
-      EventStreams.ivmStream(in.toDS(), wh, "ivm_base", "ivm_view")
+      EventStreams.ivmStream(in.toDS(),
+      IvmStore.Warehouse(wh, "ivm_base", "ivm_view"))
         .option("checkpointLocation", ckpt).start()
     val q1 = start()
     val id1 = q1.id
@@ -745,20 +719,20 @@ class EventStreamsSpec extends SparkTestBase {
     // query A ran up to epoch 5
     EventStreams.applyIvmBatch(
       Seq(EventStreams.CdcViewChange(2, 1, "I", 10, 200)).toDF(),
-      wh, "ivm_base", "ivm_view", epoch = 5L, queryId = "query-A")
+      IvmStore.Warehouse(wh, "ivm_base", "ivm_view"), epoch = 5L, queryId = "query-A")
     assert(view() === Set((10L, 2L, 300L)))
     // checkpoint re-created: query B restarts the epoch counter at 0.
     // An epoch-only marker would skip this batch (0 <= 5) — unbounded
     // silent data loss; the (query_id, epoch) marker must apply it.
     EventStreams.applyIvmBatch(
       Seq(EventStreams.CdcViewChange(3, 1, "I", 20, 700)).toDF(),
-      wh, "ivm_base", "ivm_view", epoch = 0L, queryId = "query-B")
+      IvmStore.Warehouse(wh, "ivm_base", "ivm_view"), epoch = 0L, queryId = "query-B")
     assert(view() === Set((10L, 2L, 300L), (20L, 1L, 700L)),
       "a new query id's epoch 0 is new work, not a replay")
     // and query B's OWN replay of epoch 0 still skips
     EventStreams.applyIvmBatch(
       Seq(EventStreams.CdcViewChange(3, 2, "D", 0, 0)).toDF(),
-      wh, "ivm_base", "ivm_view", epoch = 0L, queryId = "query-B")
+      IvmStore.Warehouse(wh, "ivm_base", "ivm_view"), epoch = 0L, queryId = "query-B")
     assert(view() === Set((10L, 2L, 300L), (20L, 1L, 700L)),
       "same query id + stale epoch must still skip")
     // ZOMBIE lineage: query A's driver resurfaces AFTER B's takeover and
@@ -768,7 +742,7 @@ class EventStreamsSpec extends SparkTestBase {
     // per-lineage map must still refuse it
     EventStreams.applyIvmBatch(
       Seq(EventStreams.CdcViewChange(2, 1, "I", 10, 200)).toDF(),
-      wh, "ivm_base", "ivm_view", epoch = 5L, queryId = "query-A")
+      IvmStore.Warehouse(wh, "ivm_base", "ivm_view"), epoch = 5L, queryId = "query-A")
     assert(view() === Set((10L, 2L, 300L), (20L, 1L, 700L)),
       "a zombie lineage's redelivered epoch re-applied after takeover")
   }
@@ -789,7 +763,7 @@ class EventStreamsSpec extends SparkTestBase {
     // skipper, because no marker write ever follows a skip
     EventStreams.applyIvmBatch(
       Seq(EventStreams.CdcViewChange(9, 1, "I", 99, 999)).toDF(),
-      wh, "ivm_base", "ivm_view", epoch = 3L, queryId = "resumer")
+      IvmStore.Warehouse(wh, "ivm_base", "ivm_view"), epoch = 3L, queryId = "resumer")
     assert(view() === Set((10L, 1L, 100L)), "floor skip must not apply")
     val marker = wh.read("ivm_view__epoch")
     assert(marker.columns.contains("query_id"),
@@ -803,14 +777,14 @@ class EventStreamsSpec extends SparkTestBase {
     // loss the rescope closes)
     EventStreams.applyIvmBatch(
       Seq(EventStreams.CdcViewChange(2, 1, "I", 20, 700)).toDF(),
-      wh, "ivm_base", "ivm_view", epoch = 0L, queryId = "fresh")
+      IvmStore.Warehouse(wh, "ivm_base", "ivm_view"), epoch = 0L, queryId = "fresh")
     assert(view() === Set((10L, 1L, 100L), (20L, 1L, 700L)),
       "a fresh lineage's epoch 0 must apply after the floor is scoped away")
     // and the resumer's guard survived the rescope: its epoch 5 replay
     // still refuses
     EventStreams.applyIvmBatch(
       Seq(EventStreams.CdcViewChange(9, 1, "I", 99, 999)).toDF(),
-      wh, "ivm_base", "ivm_view", epoch = 5L, queryId = "resumer")
+      IvmStore.Warehouse(wh, "ivm_base", "ivm_view"), epoch = 5L, queryId = "resumer")
     assert(view() === Set((10L, 1L, 100L), (20L, 1L, 700L)),
       "the rescoped floor must still guard the resuming lineage's replays")
   }
@@ -825,7 +799,7 @@ class EventStreamsSpec extends SparkTestBase {
       .toDF("k", "ck", "cents"))
     EventStreams.applyIvmBatch(
       Seq(EventStreams.CdcViewChange(4, 1, "I", 20, 50)).toDF(),
-      wh, "ivm_base", "ivm_view", epoch = 0L, queryId = "boot")
+      IvmStore.Warehouse(wh, "ivm_base", "ivm_view"), epoch = 0L, queryId = "boot")
     val got = wh.read("ivm_view").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val want = wh.read("ivm_base").groupBy("ck")
@@ -847,7 +821,7 @@ class EventStreamsSpec extends SparkTestBase {
     EventStreams.applyIvmBatch(
       Seq(EventStreams.CdcViewChange(1, 7, "U", 20, 500),
         EventStreams.CdcViewChange(1, 7, "U", 30, 111)).toDF(),
-      wh, "ivm_base", "ivm_view", epoch = 0L, queryId = "ties")
+      IvmStore.Warehouse(wh, "ivm_base", "ivm_view"), epoch = 0L, queryId = "ties")
     val got = wh.read("ivm_view").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val want = wh.read("ivm_base").groupBy("ck")

@@ -42,7 +42,7 @@ class FileSourceTwinSpec extends SparkTestBase {
       .parquet(srcDir)
       .as[EventStreams.CdcViewChange]
     val qF = EventStreams
-      .ivmStreamPartitioned(changes, whF, "base", "view", 4)
+      .ivmStream(changes, IvmStore.Warehouse(whF, "base", "view", 4))
       .option("checkpointLocation", s"$root/ckpt")
       .start()
     try {
@@ -75,7 +75,7 @@ class FileSourceTwinSpec extends SparkTestBase {
     val whM = new graft.compendium.Warehouse(spark, tmpDir())
     val in = MemoryStream[EventStreams.CdcViewChange]
     val qM = EventStreams
-      .ivmStreamPartitioned(in.toDS(), whM, "base", "view", 4)
+      .ivmStream(in.toDS(), IvmStore.Warehouse(whM, "base", "view", 4))
       .start()
     try slices.foreach { s => in.addData(s); qM.processAllAvailable() }
     finally qM.stop()

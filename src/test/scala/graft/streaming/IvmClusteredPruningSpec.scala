@@ -88,8 +88,8 @@ class IvmClusteredPruningSpec extends SparkTestBase {
         new org.apache.hadoop.fs.Path(s"$root/${d.replace("=", "_hidden_")}")))
     }
     try {
-      EventStreams.applyIvmBatchPartitionedCommitted(batch.toDF(), mc,
-        "base", "view", epoch = 0L, queryId = "q", buckets = B)
+      EventStreams.applyIvmBatch(batch.toDF(), IvmStore.ManifestCommit(mc,
+        "base", "view", B), epoch = 0L, queryId = "q")
     } finally hidden.foreach { d =>
       assert(fs.rename(
         new org.apache.hadoop.fs.Path(s"$root/${d.replace("=", "_hidden_")}"),
@@ -120,8 +120,8 @@ class IvmClusteredPruningSpec extends SparkTestBase {
     // 16 changed rows confined to bucket 5
     val clustered = (0 until 16).map(i =>
       ch(5L + 16L * (i % 4), i + 1L, "U", 1000L + i))
-    EventStreams.applyIvmBatchPartitionedCommitted(clustered.toDF(), mc,
-      "base", "view", epoch = 0L, queryId = "q", buckets = B)
+    EventStreams.applyIvmBatch(clustered.toDF(), IvmStore.ManifestCommit(mc,
+      "base", "view", B), epoch = 0L, queryId = "q")
     val v1 = mc.current()
     val changedClustered = (v0.keySet ++ v1.keySet)
       .filter(k => v0.get(k) != v1.get(k)) - "view__epoch"
@@ -130,8 +130,8 @@ class IvmClusteredPruningSpec extends SparkTestBase {
     // 16 changed rows spread one per bucket
     val spread = (0 until 16).map(i =>
       ch(i.toLong, 100L + i, "U", 2000L + i))
-    EventStreams.applyIvmBatchPartitionedCommitted(spread.toDF(), mc,
-      "base", "view", epoch = 1L, queryId = "q", buckets = B)
+    EventStreams.applyIvmBatch(spread.toDF(), IvmStore.ManifestCommit(mc,
+      "base", "view", B), epoch = 1L, queryId = "q")
     val v2 = mc.current()
     val changedSpread = (v1.keySet ++ v2.keySet)
       .filter(k => v1.get(k) != v2.get(k)) - "view__epoch"

@@ -4,7 +4,7 @@ import graft.SparkTestBase
 import graft.compendium.{ManifestCommit, Warehouse}
 import org.apache.spark.sql.functions._
 
-/** ivmStreamPartitionedCommitted — the fact-scale IVM path with the
+/** The IVM epoch over a 16-bucket IvmStore.ManifestCommit — the fact-scale path with the
   * transactional flip. Pins the composition's four claims at once:
   * epoch results equal the flat path's (shared algebra), per-epoch
   * writes stay partition-pruned (untouched partition directories are
@@ -42,14 +42,14 @@ class IvmPartitionedCommittedSpec extends SparkTestBase {
   test("epoch by epoch: view == recompute(base) through ONE manifest; equal to the flat path") {
     val mc = new ManifestCommit(spark, tmpDir())
     val whF = new Warehouse(spark, tmpDir())
-    EventStreams.applyIvmBatchPartitionedCommitted(batchDF(seed), mc,
-      "base", "view", epoch = 0L, queryId = "q", buckets = B)
-    EventStreams.applyIvmBatch(batchDF(seed), whF, "base", "view",
+    EventStreams.applyIvmBatch(batchDF(seed), IvmStore.ManifestCommit(mc,
+      "base", "view", B), epoch = 0L, queryId = "q")
+    EventStreams.applyIvmBatch(batchDF(seed), IvmStore.Warehouse(whF, "base", "view"),
       epoch = 0L, queryId = "q")
     epochs.zipWithIndex.foreach { case (rows, i) =>
-      EventStreams.applyIvmBatchPartitionedCommitted(batchDF(rows), mc,
-        "base", "view", epoch = i + 1L, queryId = "q", buckets = B)
-      EventStreams.applyIvmBatch(batchDF(rows), whF, "base", "view",
+      EventStreams.applyIvmBatch(batchDF(rows), IvmStore.ManifestCommit(mc,
+        "base", "view", B), epoch = i + 1L, queryId = "q")
+      EventStreams.applyIvmBatch(batchDF(rows), IvmStore.Warehouse(whF, "base", "view"),
         epoch = i + 1L, queryId = "q")
       val snap = mc.current()
       val view = mc.readPartitionedAt(snap, "view").get
@@ -64,8 +64,8 @@ class IvmPartitionedCommittedSpec extends SparkTestBase {
   test("an epoch touching k buckets leaves every untouched partition's directory byte-identical (same files, same mtimes)") {
     val root = tmpDir()
     val mc = new ManifestCommit(spark, root)
-    EventStreams.applyIvmBatchPartitionedCommitted(batchDF(seed), mc,
-      "base", "view", epoch = 0L, queryId = "q", buckets = B)
+    EventStreams.applyIvmBatch(batchDF(seed), IvmStore.ManifestCommit(mc,
+      "base", "view", B), epoch = 0L, queryId = "q")
     val before = mc.current()
     def files(manifest: Map[String, String], key: String) = {
       val p = new org.apache.hadoop.fs.Path(s"$root/${manifest(key)}")
@@ -81,8 +81,8 @@ class IvmPartitionedCommittedSpec extends SparkTestBase {
     }
     // epoch 1 touches k=3 (pk 3) and k=70 (pk 6); its view delta spans
     // ck 3 (k=3's OLD group decrements), ck 5 (its new group) and ck 2
-    EventStreams.applyIvmBatchPartitionedCommitted(batchDF(epochs.head),
-      mc, "base", "view", epoch = 1L, queryId = "q", buckets = B)
+    EventStreams.applyIvmBatch(batchDF(epochs.head),
+      IvmStore.ManifestCommit(mc, "base", "view", B), epoch = 1L, queryId = "q")
     val after = mc.current()
     val touchedBase = Set("base/pk=3", "base/pk=6")
     val touchedView = Set("view/pck=3", "view/pck=5", "view/pck=2")
@@ -108,15 +108,15 @@ class IvmPartitionedCommittedSpec extends SparkTestBase {
 
   test("a reader's held resolution never mixes epochs — the partitioned form's torn window, closed") {
     val mc = new ManifestCommit(spark, tmpDir())
-    EventStreams.applyIvmBatchPartitionedCommitted(batchDF(seed), mc,
-      "base", "view", epoch = 0L, queryId = "q", buckets = B)
+    EventStreams.applyIvmBatch(batchDF(seed), IvmStore.ManifestCommit(mc,
+      "base", "view", B), epoch = 0L, queryId = "q")
     // reader resolves, then the writer commits an epoch between the
     // reader's view read and its base read — with per-table overwrites
     // this is exactly the new-view/old-base interleaving
     val snap = mc.current()
     val viewBefore = viewRows(mc.readPartitionedAt(snap, "view").get)
-    EventStreams.applyIvmBatchPartitionedCommitted(batchDF(epochs.head),
-      mc, "base", "view", epoch = 1L, queryId = "q", buckets = B)
+    EventStreams.applyIvmBatch(batchDF(epochs.head),
+      IvmStore.ManifestCommit(mc, "base", "view", B), epoch = 1L, queryId = "q")
     assert(viewBefore === recomputeOf(mc.readPartitionedAt(snap, "base").get),
       "the held snapshot must pair the pre-epoch view with the pre-epoch base")
     val fresh = mc.current()
@@ -130,12 +130,12 @@ class IvmPartitionedCommittedSpec extends SparkTestBase {
     // its members so the partition empties
     val tiny = Seq((5L, 0L, "I", 5L, 50L), (13L, 0L, "I", 5L, 130L),
       (2L, 0L, "I", 2L, 20L))
-    EventStreams.applyIvmBatchPartitionedCommitted(batchDF(tiny), mc,
-      "base", "view", epoch = 0L, queryId = "q", buckets = B)
+    EventStreams.applyIvmBatch(batchDF(tiny), IvmStore.ManifestCommit(mc,
+      "base", "view", B), epoch = 0L, queryId = "q")
     assert(mc.partitionKeys(mc.current(), "view").contains("view/pck=5"))
-    EventStreams.applyIvmBatchPartitionedCommitted(
-      batchDF(Seq((5L, 1L, "D", 0L, 0L), (13L, 1L, "D", 0L, 0L))), mc,
-      "base", "view", epoch = 1L, queryId = "q", buckets = B)
+    EventStreams.applyIvmBatch(
+      batchDF(Seq((5L, 1L, "D", 0L, 0L), (13L, 1L, "D", 0L, 0L))), IvmStore.ManifestCommit(mc,
+      "base", "view", B), epoch = 1L, queryId = "q")
     val cur = mc.current()
     assert(!mc.partitionKeys(cur, "view").contains("view/pck=5"),
       "an emptied view partition must leave the manifest")
@@ -148,16 +148,16 @@ class IvmPartitionedCommittedSpec extends SparkTestBase {
 
   test("zombie lineage after takeover stays refused on the committed-partitioned path; replay burns no version") {
     val mc = new ManifestCommit(spark, tmpDir())
-    EventStreams.applyIvmBatchPartitionedCommitted(batchDF(seed), mc,
-      "base", "view", epoch = 0L, queryId = "lineage-a", buckets = B)
-    EventStreams.applyIvmBatchPartitionedCommitted(batchDF(epochs.head),
-      mc, "base", "view", epoch = 1L, queryId = "lineage-a", buckets = B)
-    EventStreams.applyIvmBatchPartitionedCommitted(batchDF(epochs(1)),
-      mc, "base", "view", epoch = 0L, queryId = "lineage-b", buckets = B)
+    EventStreams.applyIvmBatch(batchDF(seed), IvmStore.ManifestCommit(mc,
+      "base", "view", B), epoch = 0L, queryId = "lineage-a")
+    EventStreams.applyIvmBatch(batchDF(epochs.head),
+      IvmStore.ManifestCommit(mc, "base", "view", B), epoch = 1L, queryId = "lineage-a")
+    EventStreams.applyIvmBatch(batchDF(epochs(1)),
+      IvmStore.ManifestCommit(mc, "base", "view", B), epoch = 0L, queryId = "lineage-b")
     val settled = viewRows(mc.readPartitionedAt(mc.current(), "view").get)
     val vSettled = mc.currentVersion()
-    EventStreams.applyIvmBatchPartitionedCommitted(batchDF(epochs.head),
-      mc, "base", "view", epoch = 1L, queryId = "lineage-a", buckets = B)
+    EventStreams.applyIvmBatch(batchDF(epochs.head),
+      IvmStore.ManifestCommit(mc, "base", "view", B), epoch = 1L, queryId = "lineage-a")
     assert(mc.currentVersion() === vSettled,
       "zombie redelivery burned a manifest version")
     assert(viewRows(mc.readPartitionedAt(mc.current(), "view").get)
@@ -167,15 +167,15 @@ class IvmPartitionedCommittedSpec extends SparkTestBase {
   test("a rewritten partition's superseded directory frees past the retain horizon while its parent still hosts live partitions") {
     val root = tmpDir()
     val mc = new ManifestCommit(spark, root, retain = 2)
-    EventStreams.applyIvmBatchPartitionedCommitted(batchDF(seed), mc,
-      "base", "view", epoch = 0L, queryId = "q", buckets = B)
+    EventStreams.applyIvmBatch(batchDF(seed), IvmStore.ManifestCommit(mc,
+      "base", "view", B), epoch = 0L, queryId = "q")
     val v0base3 = mc.current()("base/pk=3")
     val parent0 = v0base3.split('/').head
     // three epochs rewriting pk=3 push the v0 copy past retain=2
     (1 to 3).foreach { e =>
-      EventStreams.applyIvmBatchPartitionedCommitted(
-        batchDF(Seq((3L, e.toLong, "U", 5L, 100L + e))), mc,
-        "base", "view", epoch = e.toLong, queryId = "q", buckets = B)
+      EventStreams.applyIvmBatch(
+        batchDF(Seq((3L, e.toLong, "U", 5L, 100L + e))), IvmStore.ManifestCommit(mc,
+        "base", "view", B), epoch = e.toLong, queryId = "q")
     }
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

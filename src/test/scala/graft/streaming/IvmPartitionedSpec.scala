@@ -41,8 +41,8 @@ class IvmPartitionedSpec extends SparkTestBase {
     val wh = new Warehouse(spark, root)
     val base = (0L until 64L).map(k => (k, 0L, "I", k % 8, k * 10))
       .toDF("k", "seq", "op", "ck", "cents")
-    EventStreams.applyIvmBatchPartitioned(base, wh, "base", "view",
-      epoch = 0L, queryId = "seed", buckets = B)
+    EventStreams.applyIvmBatch(base, IvmStore.Warehouse(wh, "base", "view", B),
+      epoch = 0L, queryId = "seed")
     wh
   }
 
@@ -69,8 +69,8 @@ class IvmPartitionedSpec extends SparkTestBase {
       .toDF("k", "seq", "op", "ck", "cents")
     val baseBefore = (0 until B).map(p => p -> partFiles(root, "base", s"pk=$p"))
     val viewBefore = (0 until 8).map(p => p -> partFiles(root, "view", s"pck=$p"))
-    EventStreams.applyIvmBatchPartitioned(batch, wh, "base", "view",
-      epoch = 1L, queryId = "seed", buckets = B)
+    EventStreams.applyIvmBatch(batch, IvmStore.Warehouse(wh, "base", "view", B),
+      epoch = 1L, queryId = "seed")
     val touchedPk = Set(3, 6)
     val touchedPck = Set(2, 3, 5)
     baseBefore.foreach { case (p, files) =>
@@ -105,9 +105,9 @@ class IvmPartitionedSpec extends SparkTestBase {
       Seq((70L, 2L, "U", 2L, 778L)))
     epochs.zipWithIndex.foreach { case (rows, i) =>
       val b = rows.toDF("k", "seq", "op", "ck", "cents")
-      EventStreams.applyIvmBatchPartitioned(b, whP, "base", "view",
-        epoch = i + 1L, queryId = "seed", buckets = B)
-      EventStreams.applyIvmBatch(b, whF, "base", "view",
+      EventStreams.applyIvmBatch(b, IvmStore.Warehouse(whP, "base", "view", B),
+        epoch = i + 1L, queryId = "seed")
+      EventStreams.applyIvmBatch(b, IvmStore.Warehouse(whF, "base", "view"),
         epoch = i.toLong, queryId = "flat")
       assert(viewRows(whP) === whF.read("view")
         .select("ck", "n", "cents_total").collect()
@@ -122,13 +122,13 @@ class IvmPartitionedSpec extends SparkTestBase {
     val root = tmpDir()
     val wh = new Warehouse(spark, root)
     // one key per ck: deleting k=5 (ck 5) empties view bucket pck=5
-    EventStreams.applyIvmBatchPartitioned(
+    EventStreams.applyIvmBatch(
       (0L until 8L).map(k => (k, 0L, "I", k, k * 10))
         .toDF("k", "seq", "op", "ck", "cents"),
-      wh, "base", "view", epoch = 0L, queryId = "seed", buckets = B)
-    EventStreams.applyIvmBatchPartitioned(
+      IvmStore.Warehouse(wh, "base", "view", B), epoch = 0L, queryId = "seed")
+    EventStreams.applyIvmBatch(
       Seq((5L, 1L, "D", 5L, 0L)).toDF("k", "seq", "op", "ck", "cents"),
-      wh, "base", "view", epoch = 1L, queryId = "seed", buckets = B)
+      IvmStore.Warehouse(wh, "base", "view", B), epoch = 1L, queryId = "seed")
     assert(partFiles(root, "view", "pck=5").isEmpty,
       "an emptied view partition's old files would resurrect the dropped group")
     assert(viewRows(wh).map(_._1) === (0L until 8L).filterNot(_ == 5L))
@@ -145,9 +145,9 @@ class IvmPartitionedSpec extends SparkTestBase {
     // first streamed batch against a base that predates the view: the
     // bootstrap must seed from the FULL base aggregate, then apply the
     // delta — not start from empty (the flat path's round-12 defect)
-    EventStreams.applyIvmBatchPartitioned(
+    EventStreams.applyIvmBatch(
       Seq((3L, 1L, "U", 5L, 999L)).toDF("k", "seq", "op", "ck", "cents"),
-      wh, "base", "view", epoch = 0L, queryId = "boot", buckets = B)
+      IvmStore.Warehouse(wh, "base", "view", B), epoch = 0L, queryId = "boot")
     assert(viewRows(wh) === recompute(wh),
       "bootstrap view must cover every pre-existing group, not just the batch's")
   }
@@ -188,8 +188,8 @@ class IvmPartitionedSpec extends SparkTestBase {
     val in = MemoryStream[EventStreams.CdcViewChange]
     // every epoch updates the SAME key (k=3 -> pk 3, ck 3 -> pck 3):
     // the hot-partition shape — one new file in pk=3 and pck=3 per epoch
-    val q = EventStreams.ivmStreamPartitioned(in.toDS(), wh, "base", "view",
-        buckets = B, compactEvery = 3).start()
+    val q = EventStreams.ivmStream(in.toDS(), IvmStore.Warehouse(wh,
+        "base", "view", buckets = B, compactEvery = 3)).start()
     try {
       (0 until 6).foreach { i =>
         in.addData(EventStreams.CdcViewChange(3L, i.toLong, "U", 3L, 100L + i))
@@ -212,21 +212,21 @@ class IvmPartitionedSpec extends SparkTestBase {
     val wh = seedStore(root)
     val batch = Seq((3L, 1L, "U", 5L, 999L))
       .toDF("k", "seq", "op", "ck", "cents")
-    EventStreams.applyIvmBatchPartitioned(batch, wh, "base", "view",
-      epoch = 1L, queryId = "seed", buckets = B)
+    EventStreams.applyIvmBatch(batch, IvmStore.Warehouse(wh, "base", "view", B),
+      epoch = 1L, queryId = "seed")
     val after = viewRows(wh)
     // same (queryId, epoch) redelivery: deltas are not idempotent, so a
     // re-apply would double-count — must skip
-    EventStreams.applyIvmBatchPartitioned(batch, wh, "base", "view",
-      epoch = 1L, queryId = "seed", buckets = B)
+    EventStreams.applyIvmBatch(batch, IvmStore.Warehouse(wh, "base", "view", B),
+      epoch = 1L, queryId = "seed")
     assert(viewRows(wh) === after, "replayed epoch must be a no-op")
     // legacy marker (epoch-only, pre-queryId schema): the next batch must
     // interpret it with epoch-only semantics, not throw on the missing
     // column (the upgrade-in-place contract)
     wh.replace("view__epoch", Seq(1L).toDF("epoch").coalesce(1))
-    EventStreams.applyIvmBatchPartitioned(
+    EventStreams.applyIvmBatch(
       Seq((19L, 1L, "U", 3L, 555L)).toDF("k", "seq", "op", "ck", "cents"),
-      wh, "base", "view", epoch = 2L, queryId = "whatever", buckets = B)
+      IvmStore.Warehouse(wh, "base", "view", B), epoch = 2L, queryId = "whatever")
     assert(viewRows(wh) === recompute(wh),
       "post-legacy-marker batch must apply and the marker must upgrade")
     assert(wh.read("view__epoch").columns.contains("query_id"),
@@ -234,10 +234,9 @@ class IvmPartitionedSpec extends SparkTestBase {
     // the migrated floor must EXPIRE with that rewrite: a later fresh
     // lineage restarting epochs at 0 is new work — a persisted floor
     // would silently skip its first batches forever (unbounded CDC loss)
-    EventStreams.applyIvmBatchPartitioned(
+    EventStreams.applyIvmBatch(
       Seq((23L, 1L, "U", 7L, 444L)).toDF("k", "seq", "op", "ck", "cents"),
-      wh, "base", "view", epoch = 0L, queryId = "fresh-after-legacy",
-      buckets = B)
+      IvmStore.Warehouse(wh, "base", "view", B), epoch = 0L, queryId = "fresh-after-legacy")
     assert(viewRows(wh) === recompute(wh),
       "view/base diverged after the post-migration fresh-lineage epoch")
     // the non-vacuous half: the batch actually LANDED (a skip would
@@ -254,17 +253,17 @@ class IvmPartitionedSpec extends SparkTestBase {
       .toDF("k", "seq", "op", "ck", "cents")
     // lineage A applies epoch 1, then lineage B takes over from a fresh
     // checkpoint (its epoch 0 is new work and must apply)
-    EventStreams.applyIvmBatchPartitioned(aBatch, wh, "base", "view",
-      epoch = 1L, queryId = "lineage-a", buckets = B)
-    EventStreams.applyIvmBatchPartitioned(
+    EventStreams.applyIvmBatch(aBatch, IvmStore.Warehouse(wh, "base", "view", B),
+      epoch = 1L, queryId = "lineage-a")
+    EventStreams.applyIvmBatch(
       Seq((19L, 1L, "U", 3L, 555L)).toDF("k", "seq", "op", "ck", "cents"),
-      wh, "base", "view", epoch = 0L, queryId = "lineage-b", buckets = B)
+      IvmStore.Warehouse(wh, "base", "view", B), epoch = 0L, queryId = "lineage-b")
     val settled = viewRows(wh)
     assert(settled === recompute(wh))
     // ZOMBIE: A redelivers its epoch 1 after B's commit — the
     // per-lineage map must refuse the additive delta
-    EventStreams.applyIvmBatchPartitioned(aBatch, wh, "base", "view",
-      epoch = 1L, queryId = "lineage-a", buckets = B)
+    EventStreams.applyIvmBatch(aBatch, IvmStore.Warehouse(wh, "base", "view", B),
+      epoch = 1L, queryId = "lineage-a")
     assert(viewRows(wh) === settled,
       "zombie redelivery re-applied on the partitioned path")
     assert(viewRows(wh) === recompute(wh),

@@ -22,14 +22,17 @@ Columns:
     query   the streaming query (`sql.streaming.queryId`, first 8 chars)
     batch   the micro-batch (`streaming.sql.batchId`)
     label   `spark.job.description`, whitespace collapsed; empty for a
-            streaming job, whose description only repeats query and batch
+            streaming job whose description is Spark's own (it only
+            repeats query and batch), the phase for one an applier
+            labelled
     site    the call site of the job's result stage
 
 A cell longer than 48 characters is cut.
 
 `--by-batch` prints instead one row per streaming micro-batch: the
-query, the batch, its job ids and, from the batch's progress event, its
-`addBatch` time and its state operators' summed `commitTimeMs`. Only jobs
+query, the batch, its job ids, its jobs per label (`phases`; `-` for an
+unlabelled job) and, from the batch's progress event, its `addBatch` time
+and its state operators' summed `commitTimeMs`. Only jobs
 that started are listed; a log cut off mid-job shows its started jobs
 with an empty `ms`.
 """
@@ -100,7 +103,7 @@ def read_log(path):
                 "stages": len(e.get("Stage IDs") or infos), "run": 0,
                 "tasks": 0, "query": query[:8], "query_id": query,
                 "batch": props.get(BATCH_KEY) or "",
-                "label": "" if query else desc,
+                "label": "" if query and f"id = {query}" in desc else desc,
                 "site": result.get("Stage Name", ""),
             }
             for s in e.get("Stage IDs") or [s["Stage ID"] for s in infos]:
@@ -144,13 +147,18 @@ def by_batch(js, progress):
     groups = {}
     for j in js:
         if j["query"]:
-            groups.setdefault((j["query_id"], j["batch"]), []).append(j["job"])
+            groups.setdefault((j["query_id"], j["batch"]), []).append(j)
     rows = []
-    for (q, b), ids in groups.items():
+    for (q, b), batch in groups.items():
         add, commit = progress.get((q, b), ("", ""))
-        rows.append({"query": q[:8], "batch": b, "jobs": len(ids),
-                     "ids": ", ".join(map(str, ids)), "add_ms": add,
-                     "commit_ms": commit})
+        phases = {}
+        for j in batch:
+            phases[j["label"] or "-"] = phases.get(j["label"] or "-", 0) + 1
+        rows.append({"query": q[:8], "batch": b, "jobs": len(batch),
+                     "ids": ", ".join(str(j["job"]) for j in batch),
+                     "phases": ", ".join(f"{k} ×{n}"
+                                         for k, n in phases.items()),
+                     "add_ms": add, "commit_ms": commit})
     return rows
 
 
@@ -158,7 +166,8 @@ def render(path, batches=False):
     js, progress = read_log(path)
     if batches:
         return table(by_batch(js, progress), ["query", "batch", "jobs", "ids",
-                                              "add_ms", "commit_ms"])
+                                              "phases", "add_ms",
+                                              "commit_ms"])
     return table(js, ["job", "ms", "stages", "run", "tasks", "query",
                       "batch", "label", "site"])
 
@@ -191,7 +200,8 @@ def _synthetic_log():
         "show at Cli.scala:2")
     job(2, [3], stream(0), 1020, 3, [3], "start at B.scala:3")
     job(3, [4, 5], stream(1), 1030, 4, [4, 5], "start at B.scala:3")
-    job(4, [6, 7], stream(1), 1040, 2, [7], "start at B.scala:3")
+    job(4, [6, 7], {**stream(1), DESC_KEY: "ivm: view"}, 1040, 2, [7],
+        "start at B.scala:3")
     for b, add, commits in ((0, 30, [4, 5]), (1, 40, [6])):
         ev.append({"Event": PROGRESS, "progress": {
             "id": q, "batchId": b, "durationMs": {"addBatch": add},
@@ -208,7 +218,7 @@ def self_test():
         (1, 7, 2, 2, 4, "", "", "cli: compendium", "show at Cli.scala:2"),
         (2, 3, 1, 1, 2, "01234567", "0", "", "start at B.scala:3"),
         (3, 4, 2, 2, 4, "01234567", "1", "", "start at B.scala:3"),
-        (4, 2, 2, 1, 2, "01234567", "1", "", "start at B.scala:3"),
+        (4, 2, 2, 1, 2, "01234567", "1", "ivm: view", "start at B.scala:3"),
         (5, "", 1, 0, 0, "", "", "cut | off", "save at " + "C" * 60),
     ]
     keys = ["job", "ms", "stages", "run", "tasks", "query", "batch",
@@ -231,9 +241,10 @@ def self_test():
         for log in logs:
             got = [tuple(j[k] for k in keys) for j in jobs(log)]
             assert got == want, (log, got)
-            batches = [(b["batch"], b["ids"], b["add_ms"], b["commit_ms"])
-                       for b in by_batch(*read_log(log))]
-            assert batches == [("0", "2", 30, 9), ("1", "3, 4", 40, 6)], (
+            batches = [(b["batch"], b["ids"], b["phases"], b["add_ms"],
+                        b["commit_ms"]) for b in by_batch(*read_log(log))]
+            assert batches == [("0", "2", "- ×1", 30, 9),
+                               ("1", "3, 4", "- ×1, ivm: view ×1", 40, 6)], (
                 log, batches)
         last = render(plain).splitlines()[-1]
         assert last.endswith("| cut \\| off | save at " + "C" * 39 + "… |"), last
